@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
+
 
 def exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -1249,30 +1251,15 @@ def neardup_pairs_auto(
 _SIDECAR_SUBS = ("digests", "shingles", "sizes")
 
 
-def _sidecar_recover(spark, sidecar_path: str) -> None:
-    """Writer-side swap recovery for every sub-table (a crashed
-    compact leaves <sub>__old; an append that ignored it would make
-    the next compact's recovery DELETE the real generation)."""
-    from gpt_rag_ingestion_spark.operators.similarity import _recover_swap
-
-    for sub in _SIDECAR_SUBS:
-        _recover_swap(spark, f"{sidecar_path}/{sub}")
-
-
 def _sidecar_write_meta(spark, sidecar_path, n, gen, superseded, n_live) -> None:
-    spark.createDataFrame(
+    row = spark.createDataFrame(
         [(int(n), int(gen), int(superseded), int(n_live))],
         "n int, gen int, superseded long, n_live long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{sidecar_path}/meta__staging"
+    ).coalesce(1)
+    fsio.publish(
+        spark, f"{sidecar_path}/meta",
+        lambda staging: row.write.mode("overwrite").parquet(staging),
     )
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        jvm_fs_delete,
-        jvm_fs_rename,
-    )
-
-    jvm_fs_delete(spark, f"{sidecar_path}/meta")
-    jvm_fs_rename(spark, f"{sidecar_path}/meta__staging", f"{sidecar_path}/meta")
 
 
 def _sidecar_read_meta(spark, sidecar_path) -> dict:
@@ -1337,13 +1324,11 @@ def dedup_sidecar_build(
     at the same path replaces the sidecar wholesale (stale batch
     directories of a previous life are cleared first, like
     ivfpq_index_build clears its postings)."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
-
     spark = corpus.sparkSession
     for sub in _SIDECAR_SUBS:
-        jvm_fs_delete(spark, f"{sidecar_path}/{sub}")
-        jvm_fs_delete(spark, f"{sidecar_path}/{sub}__old")
-        jvm_fs_delete(spark, f"{sidecar_path}/{sub}__staging")
+        fsio.delete(spark, f"{sidecar_path}/{sub}")
+        fsio.delete(spark, f"{sidecar_path}/{sub}__old")
+        fsio.delete(spark, f"{sidecar_path}/{sub}__staging")
     n_docs = _sidecar_write(
         corpus, sidecar_path, "build", text_col, id_col, n, gen=0
     )
@@ -1374,9 +1359,12 @@ def dedup_sidecar_append(
     never low (liveness wrongly skipped), and the at-least-once replay
     that heals the directories re-counts against the healed state."""
     spark = admitted.sparkSession
-    _sidecar_recover(spark, sidecar_path)
-    from gpt_rag_ingestion_spark.operators.similarity import read_batched_dir
-
+    # writer-start recovery: a crashed compact's <sub>__old (ignored,
+    # the next compact's recovery would DELETE the real generation) and
+    # a half-published meta
+    for sub in _SIDECAR_SUBS:
+        fsio.recover_dir(spark, f"{sidecar_path}/{sub}")
+    fsio.recover(spark, f"{sidecar_path}/meta")
     meta = _sidecar_read_meta(spark, sidecar_path)
     gen = int(meta["gen"]) + 1
     batch_ids = admitted.select(
@@ -1384,7 +1372,7 @@ def dedup_sidecar_append(
     ).distinct()
     n_batch = int(batch_ids.count())
     n_super = int(
-        read_batched_dir(spark, f"{sidecar_path}/digests")
+        fsio.read_dir(spark, f"{sidecar_path}/digests")
         .join(F.broadcast(batch_ids), "doc_id", "left_semi")
         .select("doc_id")
         .distinct()
@@ -1392,7 +1380,7 @@ def dedup_sidecar_append(
     )
     if meta["superseded"] is None or meta["n_live"] is None:
         # pre-counter layout: one-off migration — count actual state
-        dig = read_batched_dir(spark, f"{sidecar_path}/digests")
+        dig = fsio.read_dir(spark, f"{sidecar_path}/digests")
         per_doc = dig.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_g"))
         prior_super = int(per_doc.filter(F.col("_g") > 1).count())
         prior_live = int(per_doc.count())
@@ -1432,11 +1420,9 @@ def _sidecar_live(spark, sidecar_path, superseded: int | None = None):
       from the digest index and BROADCAST; each table is filtered by a
       broadcast left join.  The postings are never shuffled by doc_id.
     - None (unknown / pre-counter meta): same as > 0."""
-    from gpt_rag_ingestion_spark.operators.similarity import read_batched_dir
-
-    dig = read_batched_dir(spark, f"{sidecar_path}/digests")
-    sh = read_batched_dir(spark, f"{sidecar_path}/shingles")
-    sizes = read_batched_dir(spark, f"{sidecar_path}/sizes")
+    dig = fsio.read_dir(spark, f"{sidecar_path}/digests")
+    sh = fsio.read_dir(spark, f"{sidecar_path}/shingles")
+    sizes = fsio.read_dir(spark, f"{sidecar_path}/sizes")
     if superseded == 0:
         return dig, sh, sizes
     dead = (
@@ -1581,15 +1567,11 @@ def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
     """OPTIMIZE + garbage collection for the dedup sidecar: consolidate
     each sub-table's per-batch generations into one AND drop superseded
     generations (rows of docs later re-admitted) — classification
-    results are byte-identical before and after (unit-pinned).  Uses
-    the shared crash-safe swap (operators/similarity)."""
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        _recover_swap,
-        jvm_fs_delete,
-        jvm_fs_rename,
-    )
-
-    _sidecar_recover(spark, sidecar_path)
+    results are byte-identical before and after (unit-pinned).  Each
+    sub-table is swapped in by ``fsio.swap_dir``."""
+    for sub in _SIDECAR_SUBS:
+        fsio.recover_dir(spark, f"{sidecar_path}/{sub}")
+    fsio.recover(spark, f"{sidecar_path}/meta")
     meta = _sidecar_read_meta(spark, sidecar_path)
     dig, sh, sizes = _sidecar_live(
         spark, sidecar_path, superseded=meta["superseded"]
@@ -1599,7 +1581,7 @@ def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
     for sub, df in (("digests", dig), ("shingles", sh), ("sizes", sizes)):
         live_path = f"{sidecar_path}/{sub}"
         staging = f"{live_path}__staging"
-        jvm_fs_delete(spark, staging)
+        fsio.delete(spark, staging)
         kept = df.drop("batch") if "batch" in df.columns else df
         kept.write.mode("overwrite").parquet(f"{staging}/batch=compacted")
         out[sub] = int(
@@ -1607,7 +1589,7 @@ def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
         )
         staged[sub] = staging
     # all staging generations ready: swap each (crash between swaps is
-    # healed per-sub-table by _sidecar_recover on the next writer).
+    # healed per-sub-table by the next writer's recover_dir).
     # The LIVENESS AUTHORITY (digests) must swap LAST: if digests
     # folded first and a crash left shingles/sizes unfolded, the dead
     # set derived from the folded digests would be empty while stale
@@ -1617,13 +1599,7 @@ def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
     # mid-sequence leaves the dead set intact (or the other tables
     # already folded, where filtering is a no-op) — always correct.
     for sub in reversed(_SIDECAR_SUBS):
-        live_path = f"{sidecar_path}/{sub}"
-        old = f"{live_path}__old"
-        jvm_fs_delete(spark, old)
-        jvm_fs_rename(spark, live_path, old)
-        jvm_fs_rename(spark, staged[sub], live_path)
-        jvm_fs_delete(spark, old)
-        spark.catalog.refreshByPath(live_path)
+        fsio.swap_dir(spark, staged[sub], f"{sidecar_path}/{sub}")
     # dead generations are gone: reset the liveness counter so the next
     # classification takes the zero-work steady-state path
     _sidecar_write_meta(

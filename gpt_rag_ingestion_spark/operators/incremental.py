@@ -167,28 +167,22 @@ def maintain_snapshot_rollup(
     applied generation's manifest has been vacuumed away (consumer
     fell behind retention), the sweep re-bootstraps with one full
     recompute instead of failing."""
+    from gpt_rag_ingestion_spark.operators import fsio
     from gpt_rag_ingestion_spark.operators.snapshot_table import (
         _current_gen,
-        _read_text,
-        _write_text,
         read_snapshot_table,
         snapshot_changes,
     )
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_exists,
-        _recover,
-        _swap_in,
-    )
 
     sums = sum_exprs or {"chars": "length(content)"}
-    _recover(spark, rollup_path)
+    fsio.recover_tree(spark, rollup_path)
     cur = _current_gen(spark, snapshot_path)
     if cur is None:
         return {"updated": False, "reason": "empty snapshot"}
     gen_file = f"{rollup_path}/_applied_gen"
     applied = (
-        int(_read_text(spark, gen_file).strip())
-        if _fs_exists(spark, gen_file)
+        int(fsio.read_text(spark, gen_file).strip())
+        if fsio.exists(spark, gen_file)
         else None
     )
     if applied == cur:
@@ -238,8 +232,8 @@ def maintain_snapshot_rollup(
         )
     staging = f"{rollup_path}__staging"
     new.write.mode("overwrite").parquet(staging)
-    _write_text(spark, f"{staging}/_applied_gen", str(cur))
-    _swap_in(spark, staging, rollup_path)
+    fsio.write_text(spark, f"{staging}/_applied_gen", str(cur))
+    fsio.swap_dir(spark, staging, rollup_path)
     return {
         "updated": True, "mode": mode,
         "from_gen": applied, "applied_gen": cur,

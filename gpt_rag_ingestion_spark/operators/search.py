@@ -51,6 +51,8 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
+
 IDF_SCALE = 1_000_000
 RRF_SCALE = 1_000_000
 RRF_K = 60
@@ -466,41 +468,31 @@ def _tindex_write_meta(
     fixed jobs across build/append/delete/compact/query; r5 judge
     brief #4).  ``batches`` is the MANIFEST: {"postings": [dir
     names], "doclen": [dir names]} — the committed snapshot readers
-    resolve.  Crash protocol: staging file, delete, rename — the
-    rename is the one commit point of every lifecycle op."""
+    resolve.  Committed by ``fsio.publish``, whose rename is the one
+    commit point of every lifecycle op."""
     import json as _json
 
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        jvm_fs_delete,
-        jvm_fs_rename,
+    body = _json.dumps(
+        {
+            "gen": int(gen),
+            "superseded": int(superseded),
+            "n_live": int(n_live),
+            "l_live": int(l_live),
+            "batches": {
+                sub: sorted(batches[sub]) for sub in _TEXT_INDEX_SUBS
+            },
+        }
     )
-    from gpt_rag_ingestion_spark.operators.snapshot_table import _write_text
-
-    _write_text(
-        spark,
-        f"{index_path}/meta__staging",
-        _json.dumps(
-            {
-                "gen": int(gen),
-                "superseded": int(superseded),
-                "n_live": int(n_live),
-                "l_live": int(l_live),
-                "batches": {
-                    sub: sorted(batches[sub]) for sub in _TEXT_INDEX_SUBS
-                },
-            }
-        ),
+    fsio.publish(
+        spark, f"{index_path}/meta",
+        lambda staging: fsio.write_text(spark, staging, body),
     )
-    jvm_fs_delete(spark, f"{index_path}/meta")
-    jvm_fs_rename(spark, f"{index_path}/meta__staging", f"{index_path}/meta")
 
 
 def _tindex_read_meta(spark, index_path) -> dict:
     import json as _json
 
-    from gpt_rag_ingestion_spark.operators.snapshot_table import _read_text
-
-    return _json.loads(_read_text(spark, f"{index_path}/meta"))
+    return _json.loads(fsio.read_text(spark, f"{index_path}/meta"))
 
 
 def _tindex_recover(spark, index_path) -> None:
@@ -514,29 +506,13 @@ def _tindex_recover(spark, index_path) -> None:
     (gen > committed), which would otherwise block that generation
     forever.  Same slow-writer caveat as the snapshot table's
     _claim_recover."""
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        jvm_fs_exists,
-        jvm_fs_rename,
-    )
-
-    if not jvm_fs_exists(spark, f"{index_path}/meta"):
-        if jvm_fs_exists(spark, f"{index_path}/meta__staging"):
-            jvm_fs_rename(
-                spark, f"{index_path}/meta__staging", f"{index_path}/meta"
-            )
-        else:
-            return  # pre-build: nothing to prune
+    if not fsio.recover(spark, f"{index_path}/meta"):
+        return  # pre-build: nothing to prune
     meta = _tindex_read_meta(spark, index_path)
     committed = int(meta["gen"])
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
     for sub in _TEXT_INDEX_SUBS:
         listed = {f"batch={n}" for n in meta["batches"][sub]}
-        root = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{sub}")
-        fs = root.getFileSystem(hconf)
-        if not fs.exists(root):
-            continue
-        for st in fs.listStatus(root):
+        for st in fsio.list(spark, f"{index_path}/{sub}"):
             name = st.getPath().getName()
             if name in listed or "__g" not in name:
                 continue
@@ -545,18 +521,15 @@ def _tindex_recover(spark, index_path) -> None:
             except ValueError:
                 continue
             if g <= committed:
-                fs.delete(st.getPath(), True)
-    croot = jvm.org.apache.hadoop.fs.Path(f"{index_path}/claims")
-    cfs = croot.getFileSystem(hconf)
-    if cfs.exists(croot):
-        for st in cfs.listStatus(croot):
-            name = st.getPath().getName()
-            try:
-                g = int(name.lstrip("g"))
-            except ValueError:
-                continue
-            if g > committed:
-                cfs.delete(st.getPath(), False)
+                fsio.delete(spark, st.getPath().toString())
+    for st in fsio.list(spark, f"{index_path}/claims"):
+        name = st.getPath().getName()
+        try:
+            g = int(name.lstrip("g"))
+        except ValueError:
+            continue
+        if g > committed:
+            fsio.delete(spark, st.getPath().toString())
 
 
 def _tindex_read_sub(spark, index_path, sub, names):
@@ -617,13 +590,11 @@ def text_index_build(
 ) -> dict:
     """Build the persisted index from the existing corpus (the one
     full-corpus pass; later batches touch O(batch))."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
-
     spark = chunks.sparkSession
     for sub in _TEXT_INDEX_SUBS:
-        jvm_fs_delete(spark, f"{index_path}/{sub}")
-    jvm_fs_delete(spark, f"{index_path}/claims")
-    jvm_fs_delete(spark, f"{index_path}/meta")
+        fsio.delete(spark, f"{index_path}/{sub}")
+    fsio.delete(spark, f"{index_path}/claims")
+    fsio.delete(spark, f"{index_path}/meta")
     postings, doclen = _tindex_tables(chunks, text_col, id_col, gen=0)
     postings.write.mode("overwrite").parquet(
         f"{index_path}/postings/batch=build__g0"
@@ -728,14 +699,12 @@ def _tindex_commit(
     """Claim the generation, then commit the new manifest.  On a lost
     claim the writer deletes its own staged dirs (they are unlisted —
     harmless to readers — but tidy) and raises."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
-
     try:
         _tindex_claim(spark, index_path, gen)
     except TextIndexWriteConflict:
         for sub in _TEXT_INDEX_SUBS:
             for n in add.get(sub, []):
-                jvm_fs_delete(spark, f"{index_path}/{sub}/batch={n}")
+                fsio.delete(spark, f"{index_path}/{sub}/batch={n}")
         raise
     batches = {
         sub: (
@@ -926,8 +895,6 @@ def text_index_compact(spark, index_path: str) -> dict:
     swap-ordering hazard class is gone structurally).  Compaction
     claims a generation like every other writer, so it also cannot
     race an append."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
-
     _tindex_recover(spark, index_path)
     meta = _tindex_read_meta(spark, index_path)
     gen = int(meta["gen"]) + 1
@@ -954,7 +921,7 @@ def text_index_compact(spark, index_path: str) -> dict:
     # collect them now rather than leaving them to the next writer
     for sub, names in old_names.items():
         for n in names:
-            jvm_fs_delete(spark, f"{index_path}/{sub}/batch={n}")
+            fsio.delete(spark, f"{index_path}/{sub}/batch={n}")
     return out
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from gpt_rag_ingestion_spark.embeddings import embed_text_deterministic
+from gpt_rag_ingestion_spark.operators import fsio
 
 
 def _dot(a, b):
@@ -987,9 +988,9 @@ def ivf_index_build(
     )
     # wipe any previous generation BEFORE the new centroids land: old
     # postings/stats/baseline are keyed to the old centroid set
-    jvm_fs_delete(spark, f"{index_path}/postings")
-    jvm_fs_delete(spark, f"{index_path}/stats")
-    jvm_fs_delete(spark, f"{index_path}/baseline")
+    fsio.delete(spark, f"{index_path}/postings")
+    fsio.delete(spark, f"{index_path}/stats")
+    fsio.delete(spark, f"{index_path}/baseline")
     cent_rows = [
         (int(j), [float(x) for x in C[j]]) for j in range(len(C))
     ]
@@ -1002,27 +1003,6 @@ def ivf_index_build(
         "batch string, mean_assign_sim double",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/baseline")
     return n
-
-
-def jvm_fs_delete(spark, path: str) -> None:
-    """Delete a path through the Hadoop FileSystem API — works on any
-    supported scheme (local, hdfs://, abfss://, s3a://), unlike
-    driver-local os/shutil."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
-def jvm_fs_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API (scheme-aware —
-    a driver-local os.path.exists is always False for remote stores)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf).exists(p)
 
 
 def _ivf_load_centroids(spark, index_path: str):
@@ -1112,7 +1092,7 @@ def ivf_index_append(
     from gpt_rag_ingestion_spark.session import ensure_importable
 
     ensure_importable(vectors)
-    _ivf_recover(vectors.sparkSession, index_path)
+    fsio.recover_dir(vectors.sparkSession, f"{index_path}/postings")
     C = _ivf_load_centroids(vectors.sparkSession, index_path)
     return _ivf_append(vectors, index_path, C, batch_label, id_col, vec_col)
 
@@ -1133,17 +1113,15 @@ def ivf_index_query(
     cosine + global top-k inside the probed cells (same cogrouped tail
     as ivf_ann).
 
-    Readers NEVER mutate the index: a query that lands inside a
-    compactor's swap window (``postings`` renamed away, replacement not
-    yet in place) falls back to READING ``postings__old`` — it does not
-    rename it back, which could otherwise interleave with the
-    compactor's staging→postings rename and nest a double-generation
-    layout.  Swap recovery runs only from the writers
+    Readers NEVER mutate the index: a query inside a compactor's swap
+    window reads ``postings__old`` through ``fsio.read_dir`` and never
+    renames it back, which could interleave with the compactor's
+    staging→postings rename.  Swap recovery runs only from the writers
     (append/compact) under the single-writer assumption.  The fallback
-    NARROWS the race window rather than closing it (the exists-check
-    and the scan are not atomic): a scan overlapping the compactor's
-    final renames can still see FileNotFound and should be retried;
-    snapshot-isolated table formats (Delta/Iceberg) close it fully."""
+    narrows the race window rather than closing it: a scan overlapping
+    the compactor's final renames can still see FileNotFound and
+    should be retried; snapshot-isolated table formats (Delta/Iceberg)
+    close it fully."""
     from gpt_rag_ingestion_spark.session import ensure_importable
 
     ensure_importable(queries)
@@ -1160,14 +1138,8 @@ def ivf_index_query(
     probed = [
         int(r["cell"]) for r in qd.select("cell").distinct().collect()
     ]
-    postings_path = f"{index_path}/postings"
-    if not jvm_fs_exists(spark, postings_path) and jvm_fs_exists(
-        spark, f"{index_path}/postings__old"
-    ):
-        # mid-swap: read the previous generation, mutate nothing
-        postings_path = f"{index_path}/postings__old"
     postings = (
-        spark.read.parquet(postings_path)
+        fsio.read_dir(spark, f"{index_path}/postings")
         .filter(F.col("cell").isin(probed))
         .withColumn("cell", F.col("cell").cast("long"))
         .select("corpus_id", "cv", "cell")
@@ -1183,13 +1155,13 @@ def ivf_needs_refit(spark, index_path: str, tolerance: float = 0.05) -> bool:
     centroid write and the build batch leaves stats/baseline absent
     entirely — reports True (rebuild) instead of crashing the
     monitor."""
-    if not jvm_fs_exists(spark, f"{index_path}/baseline"):
+    if not fsio.exists(spark, f"{index_path}/baseline"):
         return True
     base_row = spark.read.parquet(f"{index_path}/baseline").first()
     if base_row is None:
         return True
     base, base_label = base_row["mean_assign_sim"], base_row["batch"]
-    if not jvm_fs_exists(spark, f"{index_path}/stats"):
+    if not fsio.exists(spark, f"{index_path}/stats"):
         return True
     stats = spark.read.parquet(f"{index_path}/stats").collect()
     appended = [
@@ -1202,36 +1174,6 @@ def ivf_needs_refit(spark, index_path: str, tolerance: float = 0.05) -> bool:
     return min(appended) < base - tolerance
 
 
-def jvm_fs_rename(spark, src: str, dst: str) -> bool:
-    """Atomic-per-directory rename through the Hadoop FileSystem API."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    ps, pd_ = jvm.org.apache.hadoop.fs.Path(src), jvm.org.apache.hadoop.fs.Path(dst)
-    fs = ps.getFileSystem(hconf)
-    return bool(fs.rename(ps, pd_))
-
-
-def _ivf_recover(spark, index_path: str) -> None:
-    """Finish an interrupted postings swap: if ``postings`` is missing
-    and ``postings__old`` exists, the crash happened between the two
-    renames — restore the old generation.  If both exist, the swap
-    completed and ``__old`` is garbage (same contract as
-    operators/upsert).
-
-    WRITER-only (append/compact, single-writer assumption): a reader
-    running this during a live compactor's swap window would rename the
-    old generation back and collide with the compactor's
-    staging→postings rename; readers instead fall back to reading
-    ``postings__old`` (see ivf_index_query)."""
-    postings = f"{index_path}/postings"
-    old = f"{index_path}/postings__old"
-    if jvm_fs_exists(spark, old):
-        if jvm_fs_exists(spark, postings):
-            jvm_fs_delete(spark, old)
-        else:
-            jvm_fs_rename(spark, old, postings)
-
-
 def ivf_index_compact(spark, index_path: str, label: str = "compacted") -> dict:
     """Consolidate the ``batch=...`` postings generations left by
     streaming appends into ONE generation — the index's OPTIMIZE.
@@ -1239,45 +1181,22 @@ def ivf_index_compact(spark, index_path: str, label: str = "compacted") -> dict:
     1024 cells that is ~25k files/day, and every probe pays a parquet
     footer fetch per file.  One read → one partitionBy(cell) write
     restores O(cells) files while queries keep the same pruned layout.
-
-    Crash-safe swap (the upsert contract): the consolidated generation
-    stages OUTSIDE ``postings/``, then postings→postings__old,
-    staging→postings, delete __old; ``_ivf_recover`` (run by the
-    writers append/compact only — readers fall back to
-    ``postings__old`` without renaming) finishes an interrupted swap
-    from either side.  Stats history and the drift baseline are untouched —
-    compaction moves bytes, not meaning."""
-    _ivf_recover(spark, index_path)
-    postings = f"{index_path}/postings"
-    staging = f"{index_path}/postings__staging"
-    old = f"{index_path}/postings__old"
-    existing = spark.read.parquet(postings).select("corpus_id", "cv", "cell")
-    n_before = int(existing.count())
-    jvm_fs_delete(spark, staging)
-    existing.write.partitionBy("cell").mode("overwrite").parquet(
-        f"{staging}/batch={label}"
+    Crash-safe through ``compact_batched_dir``; stats history and the
+    drift baseline are untouched — compaction moves bytes, not
+    meaning."""
+    n = compact_batched_dir(
+        spark, f"{index_path}/postings", partition_by="cell", label=label
     )
-    jvm_fs_delete(spark, old)
-    jvm_fs_rename(spark, postings, old)
-    jvm_fs_rename(spark, staging, postings)
-    jvm_fs_delete(spark, old)
-    spark.catalog.refreshByPath(postings)
-    return {"n_vectors": n_before, "label": label}
+    return {"n_vectors": n, "label": label}
 
 
 def count_batch_dirs(spark, dir_path: str) -> int:
     """Number of ``batch=...`` generations under a batched directory —
     the fragmentation signal the compaction triggers read.  One
     FileSystem listStatus, no Spark job."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(dir_path)
-    fs = p.getFileSystem(hconf)
-    if not fs.exists(p):
-        return 0
     return sum(
         1
-        for st in fs.listStatus(p)
+        for st in fsio.list(spark, dir_path)
         if st.isDirectory() and st.getPath().getName().startswith("batch=")
     )
 
@@ -1433,7 +1352,7 @@ def ivfpq_index_build(
         ],
         "subspace int, code int, b array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    jvm_fs_delete(spark, f"{index_path}/postings")
+    fsio.delete(spark, f"{index_path}/postings")
     b_model = spark.sparkContext.broadcast((C, books))
     enc = _ivfpq_encode(corpus, b_model, id_col, vec_col).persist()
     try:
@@ -1477,7 +1396,7 @@ def ivfpq_index_append(
 
     ensure_importable(vectors)
     spark = vectors.sparkSession
-    _ivf_recover(spark, index_path)
+    fsio.recover_dir(spark, f"{index_path}/postings")
     model = _ivfpq_load_model(spark, index_path)
     b_model = spark.sparkContext.broadcast(model)
     enc = _ivfpq_encode(vectors, b_model, id_col, vec_col).persist()
@@ -1530,13 +1449,8 @@ def ivfpq_index_query(
         F.explode(probe_udf(F.col(vec_col))).alias("cell"),
     ).localCheckpoint()
     probed = [int(r["cell"]) for r in qd.select("cell").distinct().collect()]
-    postings_path = f"{index_path}/postings"
-    if not jvm_fs_exists(spark, postings_path) and jvm_fs_exists(
-        spark, f"{index_path}/postings__old"
-    ):
-        postings_path = f"{index_path}/postings__old"
     enc = (
-        spark.read.parquet(postings_path)
+        fsio.read_dir(spark, f"{index_path}/postings")
         .filter(F.col("cell").isin(probed))
         .select("corpus_id", "codes", F.col("cell").cast("long").alias("cell"))
     )
@@ -1602,55 +1516,25 @@ def _ivfpq_adc_rank(enc, qd, b_model, k):
     )
 
 
-def _recover_swap(spark, live_path: str) -> None:
-    """Generic writer-side swap recovery for a ``<dir>``/``<dir>__old``
-    pair (the _ivf_recover contract for any batched directory)."""
-    old = f"{live_path}__old"
-    if jvm_fs_exists(spark, old):
-        if jvm_fs_exists(spark, live_path):
-            jvm_fs_delete(spark, old)
-        else:
-            jvm_fs_rename(spark, old, live_path)
-
-
 def compact_batched_dir(
     spark, dir_path: str, partition_by: str | None = None,
     label: str = "compacted",
 ) -> int:
     """Consolidate a directory of ``batch=<label>`` generations into
-    ONE generation with the crash-safe rename protocol shared by the
-    persisted indexes: stage outside the live dir, live→__old,
-    staging→live, drop __old.  Writers run ``_recover_swap`` first;
-    readers fall back to ``__old`` without renaming.  Returns the row
-    count moved."""
-    _recover_swap(spark, dir_path)
+    ONE generation, staged outside the live dir and swapped in by
+    ``fsio.swap_dir``.  Writers run ``fsio.recover_dir`` first;
+    readers use ``fsio.read_dir``.  Returns the row count moved."""
+    fsio.recover_dir(spark, dir_path)
     df = spark.read.parquet(dir_path).drop("batch")
     n = int(df.count())
-    staging, old = f"{dir_path}__staging", f"{dir_path}__old"
-    jvm_fs_delete(spark, staging)
+    staging = f"{dir_path}__staging"
+    fsio.delete(spark, staging)
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(partition_by)
     w.parquet(f"{staging}/batch={label}")
-    jvm_fs_delete(spark, old)
-    jvm_fs_rename(spark, dir_path, old)
-    jvm_fs_rename(spark, staging, dir_path)
-    jvm_fs_delete(spark, old)
-    spark.catalog.refreshByPath(dir_path)
+    fsio.swap_dir(spark, staging, dir_path)
     return n
-
-
-def read_batched_dir(spark, dir_path: str):
-    """Read a batched directory, falling back to the ``__old``
-    generation during a compactor's swap window — readers never rename
-    (the ivf_index_query reader contract; like it, the fallback narrows
-    the race window rather than closing it — retry on FileNotFound, or
-    use a snapshot-isolated table format)."""
-    if not jvm_fs_exists(spark, dir_path) and jvm_fs_exists(
-        spark, f"{dir_path}__old"
-    ):
-        dir_path = f"{dir_path}__old"
-    return spark.read.parquet(dir_path)
 
 
 def ivfpq_index_compact(spark, index_path: str, label: str = "compacted") -> dict:

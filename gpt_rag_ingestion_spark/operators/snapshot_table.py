@@ -89,13 +89,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators.upsert import (
-    _fs_delete,
     _no_partition_inference,
-    _fs_exists,
-    _fs_mkdirs,
-    _fs_rename,
-    _hfs,
     _partition_rel_path,
     merged_view,
 )
@@ -108,20 +104,11 @@ class SnapshotWriteConflict(RuntimeError):
     garbage for vacuum).  Retry by re-running the merge."""
 
 
-def _write_text(spark, path: str, text: str) -> None:
-    fs, p = _hfs(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
 def _write_text_exclusive(spark, path: str, text: str) -> None:
     """Atomic create-exclusive (``fs.create(p, overwrite=False)``):
     exactly one of N racing writers succeeds — the commit-arbitration
     primitive.  Raises ``SnapshotWriteConflict`` if the file exists."""
-    fs, p = _hfs(spark, path)
+    fs, p = fsio.handle(spark, path)
     try:
         out = fs.create(p, False)
     except Exception as e:  # Py4JJavaError: FileAlreadyExistsException
@@ -138,21 +125,11 @@ def _write_text_exclusive(spark, path: str, text: str) -> None:
         out.close()
 
 
-def _read_text(spark, path: str) -> str:
-    jvm = spark.sparkContext._jvm
-    fs, p = _hfs(spark, path)
-    stm = fs.open(p)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stm, "UTF-8")
-    finally:
-        stm.close()
-
-
 def _commit_recover(spark, table_path: str) -> None:
     """Roll FORWARD a half-committed pointer: ``_current__tmp`` exists
     only between 'commit started' and 'commit done', and by then its
     manifest+generation are fully written — so finishing the rename is
-    safe.  ``_write_text`` itself is NOT atomic though: a crash
+    safe.  ``fsio.write_text`` itself is NOT atomic though: a crash
     mid-write can leave a truncated/empty tmp whose roll-forward would
     brick every later ``_current_gen`` on ``int('')`` — so validate
     first (parses as an int AND that generation's manifest exists);
@@ -161,11 +138,11 @@ def _commit_recover(spark, table_path: str) -> None:
     ``_current_gen`` instead.)"""
     tmp = f"{table_path}/_current__tmp"
     cur = f"{table_path}/_current"
-    if not _fs_exists(spark, tmp):
+    if not fsio.exists(spark, tmp):
         return
     try:
-        gen = int(_read_text(spark, tmp).strip())
-        ok = _fs_exists(spark, _manifest_path(table_path, gen))
+        gen = int(fsio.read_text(spark, tmp).strip())
+        ok = fsio.exists(spark, _manifest_path(table_path, gen))
     except Exception:  # unreadable / non-int / missing-manifest probe
         ok = False
     if ok:
@@ -175,20 +152,20 @@ def _commit_recover(spark, table_path: str) -> None:
         # propagate: verify the pointer instead, and restore it if the
         # delete-then-rename interleaving left none.
         try:
-            _fs_delete(spark, cur)
-            _fs_rename(spark, tmp, cur)
+            fsio.delete(spark, cur)
+            fsio.rename(spark, tmp, cur)
         except Exception:
             got = None
             try:
-                if _fs_exists(spark, cur):
-                    got = int(_read_text(spark, cur).strip())
+                if fsio.exists(spark, cur):
+                    got = int(fsio.read_text(spark, cur).strip())
             except Exception:
                 pass
             if got is None or got < gen:
-                _write_text(spark, cur, str(gen))
+                fsio.write_text(spark, cur, str(gen))
     else:
         try:
-            _fs_delete(spark, tmp)
+            fsio.delete(spark, tmp)
         except Exception:
             pass
 
@@ -225,7 +202,7 @@ def _start_claim_heartbeat(spark, claimed: str):
     def _beat() -> None:
         while not stop.wait(CLAIM_HEARTBEAT_MS / 1000.0):
             try:
-                fs, p = _hfs(spark, claimed)
+                fs, p = fsio.handle(spark, claimed)
                 if not fs.exists(p):
                     return
                 fs.setTimes(p, _now_ms(spark), -1)
@@ -264,7 +241,7 @@ def _claim_recover(
     claim-ownership re-verify catches the re-claim at the pointer
     swap.  Writers only; readers never mutate."""
     cur = _current_gen(spark, table_path)
-    fs, mdir = _hfs(spark, f"{table_path}/_manifests")
+    fs, mdir = fsio.handle(spark, f"{table_path}/_manifests")
     if not fs.exists(mdir):
         return
     lease = CLAIM_LEASE_MS if lease_ms is None else lease_ms
@@ -294,8 +271,8 @@ def _current_gen(spark, table_path: str) -> int | None:
         # exists() then read() is a TOCTOU under a concurrent swap —
         # treat a vanished-between-probes file as absent, not an error
         try:
-            if _fs_exists(spark, path):
-                return int(_read_text(spark, path).strip())
+            if fsio.exists(spark, path):
+                return int(fsio.read_text(spark, path).strip())
         except Exception:
             pass
         return None
@@ -406,7 +383,7 @@ def _manifest_path(table_path: str, gen: int) -> str:
 
 
 def _read_manifest(spark, table_path: str, gen: int) -> dict:
-    return json.loads(_read_text(spark, _manifest_path(table_path, gen)))
+    return json.loads(fsio.read_text(spark, _manifest_path(table_path, gen)))
 
 
 def _gen_name(gen: int) -> str:
@@ -427,7 +404,7 @@ def _list_partition_rels(spark, gen_dir: str, depth: int) -> list[str]:
     """Relative ``p=v[/q=w...]`` paths actually present under a
     generation directory (a merged partition can come out empty and is
     then absent).  Metadata listing only."""
-    fs, root = _hfs(spark, gen_dir)
+    fs, root = fsio.handle(spark, gen_dir)
     rels: list[str] = []
 
     def walk(p, rel_parts, d):
@@ -460,14 +437,14 @@ def _dv_map(spark, table_path: str, manifest: dict) -> dict:
     if not name:
         return {}
     return json.loads(
-        _read_text(spark, f"{table_path}/{_DV_DIR}/{name}")
+        fsio.read_text(spark, f"{table_path}/{_DV_DIR}/{name}")
     )["files"]
 
 
 def _write_dv(spark, table_path: str, gen: int, files: dict) -> str:
     name = f"{gen:08d}-{uuid.uuid4().hex[:8]}.json"
-    _fs_mkdirs(spark, f"{table_path}/{_DV_DIR}")
-    _write_text(
+    fsio.mkdirs(spark, f"{table_path}/{_DV_DIR}")
+    fsio.write_text(
         spark,
         f"{table_path}/{_DV_DIR}/{name}",
         json.dumps(
@@ -567,7 +544,7 @@ def snapshot_gen_at_timestamp(
     cur = _current_gen(spark, table_path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    fs, mdir = _hfs(spark, f"{table_path}/_manifests")
+    fs, mdir = fsio.handle(spark, f"{table_path}/_manifests")
     best = None
     if fs.exists(mdir):
         for st in fs.listStatus(mdir):
@@ -661,7 +638,7 @@ def read_snapshot_table(
     gen = at_gen if at_gen is not None else _current_gen(spark, table_path)
     if gen is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    if not _fs_exists(spark, _manifest_path(table_path, gen)):
+    if not fsio.exists(spark, _manifest_path(table_path, gen)):
         raise FileNotFoundError(
             f"no manifest for generation {gen} at {table_path} "
             "(never committed, or removed by snapshot_vacuum)"
@@ -778,7 +755,7 @@ def _commit(
         _prev_ts = prev.get("committed_at_ms")
         if _prev_ts is None:
             try:
-                _pfs, _pmp = _hfs(
+                _pfs, _pmp = fsio.handle(
                     spark, _manifest_path(table_path, expected_cur)
                 )
                 _prev_ts = int(_pfs.getFileStatus(_pmp).getModificationTime())
@@ -811,7 +788,7 @@ def _commit(
             # The generation dir names inside ``partitions`` carry a
             # per-attempt token, so byte-comparing the manifest
             # proves ownership.
-            if _read_text(spark, claimed) != body_json:
+            if fsio.read_text(spark, claimed) != body_json:
                 raise SnapshotWriteConflict(
                     f"claim for generation {gen} was pruned after a "
                     f">{CLAIM_LEASE_MS} ms heartbeat gap and "
@@ -828,30 +805,30 @@ def _commit(
             import time as _time
 
             for _ in range(200):
-                if not _fs_exists(spark, tmp):
+                if not fsio.exists(spark, tmp):
                     break
                 _time.sleep(0.05)
             else:
                 # forced roll-forward of a dead predecessor's swap:
                 # validate tmp EXACTLY as _commit_recover does before
                 # renaming it over the pointer (r8 advisor: a writer
-                # SIGKILLed mid-_write_text leaves a truncated/garbage
+                # SIGKILLed mid-fsio.write_text leaves a truncated/garbage
                 # tmp; renaming that over a valid _current bricks the
                 # table).  Invalid tmp never reached its commit's
                 # atomic point — delete it; and never touch cur until
                 # tmp is known-good.
                 try:
-                    pg = int(_read_text(spark, tmp).strip())
-                    tmp_ok = _fs_exists(spark, _manifest_path(table_path, pg))
+                    pg = int(fsio.read_text(spark, tmp).strip())
+                    tmp_ok = fsio.exists(spark, _manifest_path(table_path, pg))
                 except Exception:
                     tmp_ok = False
                 try:
                     if tmp_ok:
-                        if _fs_exists(spark, cur):
-                            _fs_delete(spark, cur)
-                        _fs_rename(spark, tmp, cur)
+                        if fsio.exists(spark, cur):
+                            fsio.delete(spark, cur)
+                        fsio.rename(spark, tmp, cur)
                     else:
-                        _fs_delete(spark, tmp)
+                        fsio.delete(spark, tmp)
                 except Exception:
                     pass
             if _current_gen(spark, table_path) != expected_cur:
@@ -859,7 +836,7 @@ def _commit(
                     f"snapshot moved during merge: based on "
                     f"{expected_cur} ({table_path})"
                 )
-            _write_text(spark, tmp, str(gen))
+            fsio.write_text(spark, tmp, str(gen))
         except BaseException:
             # Abort BEFORE the commit's atomic point (a fully written
             # tmp pointer): release the claim so the table is
@@ -868,24 +845,24 @@ def _commit(
             # rival's manifest).  Best-effort: a failure here leaves
             # an orphan for the lease path.
             try:
-                if _read_text(spark, claimed) == body_json:
-                    _fs_delete(spark, claimed)
+                if fsio.read_text(spark, claimed) == body_json:
+                    fsio.delete(spark, claimed)
             except Exception:
                 pass
             try:
                 # our tmp only — full ("57") or truncated ("5") writes
                 # of str(gen) are prefixes; a rival's valid pointer
                 # mid-swap names a different gen and is left alone
-                if _fs_exists(spark, tmp):
-                    t = _read_text(spark, tmp).strip()
+                if fsio.exists(spark, tmp):
+                    t = fsio.read_text(spark, tmp).strip()
                     if str(gen).startswith(t):
-                        _fs_delete(spark, tmp)
+                        fsio.delete(spark, tmp)
             except Exception:
                 pass
             raise
-        _fs_delete(spark, cur)
+        fsio.delete(spark, cur)
         try:
-            _fs_rename(spark, tmp, cur)
+            fsio.rename(spark, tmp, cur)
         except Exception:
             # a concurrent writer's _commit_recover may have rolled
             # THIS swap forward (consuming tmp) between our delete and
@@ -896,12 +873,12 @@ def _commit(
             # observing ours).
             got = None
             try:
-                if _fs_exists(spark, cur):
-                    got = int(_read_text(spark, cur).strip())
+                if fsio.exists(spark, cur):
+                    got = int(fsio.read_text(spark, cur).strip())
             except Exception:
                 pass
             if got is None or got < gen:
-                _write_text(spark, cur, str(gen))
+                fsio.write_text(spark, cur, str(gen))
     finally:
         heartbeat_stop.set()
 
@@ -1026,7 +1003,7 @@ def _commit_rebasing(
                 except Exception:
                     crumb = None     # best-effort; the verify still runs
             for d in ours_dirs:
-                if d.startswith("gen-") and not _fs_exists(
+                if d.startswith("gen-") and not fsio.exists(
                     spark, _gen_dir(table_path, d)
                 ):
                     raise SnapshotWriteConflict(
@@ -1049,7 +1026,7 @@ def _commit_rebasing(
     finally:
         if crumb is not None:
             try:
-                _fs_delete(spark, crumb)
+                fsio.delete(spark, crumb)
             except Exception:
                 pass
 
@@ -1168,13 +1145,13 @@ def snapshot_set_ledger_retention(
     redelivery delay measured in commits."""
     if n_generations is not None and int(n_generations) < 1:
         raise ValueError("n_generations must be >= 1 or None")
-    _fs_mkdirs(spark, table_path)
+    fsio.mkdirs(spark, table_path)
     p = f"{table_path}/{_LEDGER_RETENTION_CONF}"
     if n_generations is None:
-        if _fs_exists(spark, p):
-            _fs_delete(spark, p)
+        if fsio.exists(spark, p):
+            fsio.delete(spark, p)
         return
-    _write_text(
+    fsio.write_text(
         spark, p,
         json.dumps({"n_generations": int(n_generations)}, sort_keys=True),
     )
@@ -1182,9 +1159,9 @@ def snapshot_set_ledger_retention(
 
 def _ledger_retention(spark, table_path: str) -> int | None:
     p = f"{table_path}/{_LEDGER_RETENTION_CONF}"
-    if not _fs_exists(spark, p):
+    if not fsio.exists(spark, p):
         return None
-    return int(json.loads(_read_text(spark, p))["n_generations"])
+    return int(json.loads(fsio.read_text(spark, p))["n_generations"])
 
 
 def _retrying_merge(fn, max_conflict_rebases: int):
@@ -1304,7 +1281,7 @@ def _snapshot_merge_upsert_once(
         out["txn_gen"] = txn_gens
         return out
     _validate_constraints(spark, table_path, incoming)
-    _fs_mkdirs(spark, f"{table_path}/_manifests")
+    fsio.mkdirs(spark, f"{table_path}/_manifests")
     gen = (cur or 0) + 1
     gname = _gen_name(gen)
     new_dir = _gen_dir(table_path, gname)
@@ -2242,9 +2219,9 @@ def _register_clone(spark, source_root: str, clone_path: str) -> None:
     clone whose manifests may reference this table's generation dirs.
     Written at clone time; pruned by vacuum once the clone is gone or
     fully localized."""
-    _fs_mkdirs(spark, f"{source_root}/{_CLONES_DIR}")
+    fsio.mkdirs(spark, f"{source_root}/{_CLONES_DIR}")
     name = f"{uuid.uuid4().hex[:12]}.json"
-    _write_text(
+    fsio.write_text(
         spark,
         f"{source_root}/{_CLONES_DIR}/{name}",
         json.dumps(
@@ -2269,16 +2246,16 @@ def _register_inflight(spark, table_path: str, gnames: set[str]) -> str | None:
     local = {g for g in gnames if g.startswith("gen-")}
     if not local:
         return None
-    _fs_mkdirs(spark, f"{table_path}/{_INFLIGHT_DIR}")
+    fsio.mkdirs(spark, f"{table_path}/{_INFLIGHT_DIR}")
     path = f"{table_path}/{_INFLIGHT_DIR}/{uuid.uuid4().hex[:12]}.json"
-    _write_text(spark, path, json.dumps({"gens": sorted(local)}))
+    fsio.write_text(spark, path, json.dumps({"gens": sorted(local)}))
     return path
 
 
 def _inflight_protected_gens(spark, table_path: str) -> set[str]:
     """Generation dir names named by a lease-fresh ``_inflight``
     breadcrumb; stale breadcrumbs are pruned in passing."""
-    fs, d = _hfs(spark, f"{table_path}/{_INFLIGHT_DIR}")
+    fs, d = fsio.handle(spark, f"{table_path}/{_INFLIGHT_DIR}")
     if not fs.exists(d):
         return set()
     out: set[str] = set()
@@ -2295,7 +2272,7 @@ def _inflight_protected_gens(spark, table_path: str) -> set[str]:
         try:
             out |= set(
                 json.loads(
-                    _read_text(spark, st.getPath().toString())
+                    fsio.read_text(spark, st.getPath().toString())
                 ).get("gens", [])
             )
         except Exception:
@@ -2316,7 +2293,7 @@ def _clone_protected_gens(
     localized by OPTIMIZE so no absolute ref into this table remains —
     are pruned as a side effect, so the guard is self-cleaning."""
     root = table_path.rstrip("/")
-    fs, cdir = _hfs(spark, f"{root}/{_CLONES_DIR}")
+    fs, cdir = fsio.handle(spark, f"{root}/{_CLONES_DIR}")
     if not fs.exists(cdir):
         return set()
     # compare refs FULLY QUALIFIED through the Hadoop FileSystem (r8
@@ -2326,7 +2303,7 @@ def _clone_protected_gens(
     # lease — silently re-exposing still-shared generations.
     def _qual(path: str) -> str:
         try:
-            qfs, qp = _hfs(spark, path)
+            qfs, qp = fsio.handle(spark, path)
             return qfs.makeQualified(qp).toString().rstrip("/")
         except Exception:
             return path.rstrip("/")
@@ -2340,7 +2317,7 @@ def _clone_protected_gens(
             continue
         try:
             reg = json.loads(
-                _read_text(spark, f"{root}/{_CLONES_DIR}/{name}")
+                fsio.read_text(spark, f"{root}/{_CLONES_DIR}/{name}")
             )
             cpath = str(reg["clone_path"])
         except Exception:
@@ -2351,7 +2328,7 @@ def _clone_protected_gens(
         # scan the clone's manifest FILES, not just its committed
         # pointer: a clone mid-commit has claimed its manifest but not
         # yet swapped _current, and its refs must already protect
-        mfs, mdir = _hfs(spark, f"{cpath}/_manifests")
+        mfs, mdir = fsio.handle(spark, f"{cpath}/_manifests")
         if mfs.exists(mdir):
             for mst in mfs.listStatus(mdir):
                 mn = mst.getPath().getName()
@@ -2359,7 +2336,7 @@ def _clone_protected_gens(
                     continue
                 try:
                     m = json.loads(
-                        _read_text(spark, f"{cpath}/_manifests/{mn}")
+                        fsio.read_text(spark, f"{cpath}/_manifests/{mn}")
                     )
                 except Exception:
                     continue
@@ -2431,7 +2408,7 @@ def snapshot_vacuum(
     )
     keep = max(1, int(keep_snapshots))
     # retained manifests = the newest `keep` that actually exist
-    mdir_fs, mdir = _hfs(spark, f"{table_path}/_manifests")
+    mdir_fs, mdir = fsio.handle(spark, f"{table_path}/_manifests")
     manifest_gens = []
     fresh: set[int] = set()
     cutoff = (
@@ -2480,7 +2457,7 @@ def snapshot_vacuum(
     # staged dirs in _inflight/ (lease-aged, self-pruning) and
     # re-verify the dirs exist before each rebased attempt.
     inflight_protected = _inflight_protected_gens(spark, table_path)
-    fs, root = _hfs(spark, table_path)
+    fs, root = fsio.handle(spark, table_path)
     removed_gens = 0
     protected_for_clones = 0
     doomed_gens: list[str] = []
@@ -2501,7 +2478,7 @@ def snapshot_vacuum(
                 removed_gens += 1
                 continue
             fs.delete(st.getPath(), True)
-            _fs_delete(spark, _gen_stats_path(table_path, name))
+            fsio.delete(spark, _gen_stats_path(table_path, name))
             removed_gens += 1
     # EXTERNAL sidecars (ext-<digest>.json, written by
     # snapshot_convert_from_parquet collect_stats): vacuum never
@@ -2509,7 +2486,7 @@ def snapshot_vacuum(
     # retained manifest references the external ref any more (a
     # rewrite localized it), its sidecar is garbage.  Self-describing:
     # each carries its ref in "gen_dir".
-    sfs, sdir = _hfs(spark, f"{table_path}/{_STATS_DIR}")
+    sfs, sdir = fsio.handle(spark, f"{table_path}/{_STATS_DIR}")
     if sfs.exists(sdir):
         for st in sfs.listStatus(sdir):
             name = st.getPath().getName()
@@ -2517,7 +2494,7 @@ def snapshot_vacuum(
                 continue
             try:
                 ref = json.loads(
-                    _read_text(spark, st.getPath().toString())
+                    fsio.read_text(spark, st.getPath().toString())
                 ).get("gen_dir")
             except Exception:
                 continue
@@ -2544,7 +2521,7 @@ def snapshot_vacuum(
         name = _read_manifest(spark, table_path, g).get("dv")
         if name:
             dv_live.add(name)
-    dv_fs, dvdir = _hfs(spark, f"{table_path}/{_DV_DIR}")
+    dv_fs, dvdir = fsio.handle(spark, f"{table_path}/{_DV_DIR}")
     if dv_fs.exists(dvdir):
         for st in dv_fs.listStatus(dvdir):
             name = st.getPath().getName()
@@ -2644,7 +2621,7 @@ def snapshot_changes(
     Requires both manifests to still exist (``snapshot_vacuum`` is
     the retention boundary, exactly as for time travel)."""
     for g in (from_gen, to_gen):
-        if not _fs_exists(spark, _manifest_path(table_path, g)):
+        if not fsio.exists(spark, _manifest_path(table_path, g)):
             raise FileNotFoundError(
                 f"no manifest for generation {g} at {table_path} "
                 "(never committed, or removed by snapshot_vacuum)"
@@ -2838,15 +2815,15 @@ def snapshot_enable_stats(
         "bloom_bits": int(bloom_bits),
         "bloom_hashes": int(bloom_hashes),
     }
-    _fs_mkdirs(spark, table_path)
-    _write_text(spark, f"{table_path}/{_STATS_CONF}", json.dumps(conf, sort_keys=True))
+    fsio.mkdirs(spark, table_path)
+    fsio.write_text(spark, f"{table_path}/{_STATS_CONF}", json.dumps(conf, sort_keys=True))
 
 
 def _stats_conf(spark, table_path: str) -> dict | None:
     p = f"{table_path}/{_STATS_CONF}"
-    if not _fs_exists(spark, p):
+    if not fsio.exists(spark, p):
         return None
-    return json.loads(_read_text(spark, p))
+    return json.loads(fsio.read_text(spark, p))
 
 
 def _gen_stats_path(table_path: str, gname: str) -> str:
@@ -2890,10 +2867,10 @@ def _find_stats_sidecar(spark, table_path: str, g: str) -> dict | None:
         sp = _gen_stats_path(src_tbl, base)
     else:
         sp = _ext_stats_path(table_path, g)
-    if not _fs_exists(spark, sp):
+    if not fsio.exists(spark, sp):
         return None
     try:
-        return json.loads(_read_text(spark, sp))
+        return json.loads(fsio.read_text(spark, sp))
     except Exception:
         return None
 
@@ -3005,8 +2982,8 @@ def _maybe_write_stats(
                 blooms[c].get(r["__file"], 0), "x"
             )
         files[r["__file"]] = ent
-    _fs_mkdirs(spark, f"{table_path}/{_STATS_DIR}")
-    _write_text(
+    fsio.mkdirs(spark, f"{table_path}/{_STATS_DIR}")
+    fsio.write_text(
         spark,
         (
             _ext_stats_path(table_path, gname)
@@ -3313,7 +3290,7 @@ def snapshot_compact_partitions(
             else:
                 for r in grels:
                     sub = _gen_base(table_path, g) + (f"/{r}" if r else "")
-                    fs, p = _hfs(spark, sub)
+                    fs, p = fsio.handle(spark, sub)
                     if not fs.exists(p):
                         continue
                     counts[r] += sum(
@@ -3416,9 +3393,9 @@ class SnapshotConstraintViolation(ValueError):
 
 def _constraints(spark, table_path: str) -> dict:
     p = f"{table_path}/{_CONSTRAINTS_CONF}"
-    if not _fs_exists(spark, p):
+    if not fsio.exists(spark, p):
         return {}
-    return json.loads(_read_text(spark, p))["checks"]
+    return json.loads(fsio.read_text(spark, p))["checks"]
 
 
 def _validate_constraints(spark, table_path: str, df: DataFrame) -> None:
@@ -3466,8 +3443,8 @@ def snapshot_add_constraint(
             )
     checks = dict(existing)
     checks[name] = expr
-    _fs_mkdirs(spark, table_path)
-    _write_text(
+    fsio.mkdirs(spark, table_path)
+    fsio.write_text(
         spark,
         f"{table_path}/{_CONSTRAINTS_CONF}",
         json.dumps({"checks": checks}, sort_keys=True),
@@ -3481,7 +3458,7 @@ def snapshot_drop_constraint(
     checks = _constraints(spark, table_path)
     found = name in checks
     checks.pop(name, None)
-    _write_text(
+    fsio.write_text(
         spark,
         f"{table_path}/{_CONSTRAINTS_CONF}",
         json.dumps({"checks": checks}, sort_keys=True),
@@ -3836,7 +3813,7 @@ def snapshot_history(spark: SparkSession, table_path: str) -> list[dict]:
     only; older manifests may predate the op tag and report
     op=None."""
     cur = _current_gen(spark, table_path)
-    fs, mdir = _hfs(spark, f"{table_path}/_manifests")
+    fs, mdir = fsio.handle(spark, f"{table_path}/_manifests")
     if not fs.exists(mdir):
         return []
     gens = []
@@ -3900,7 +3877,7 @@ def snapshot_restore(
     cur = _current_gen(spark, table_path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    if not _fs_exists(spark, _manifest_path(table_path, to_gen)):
+    if not fsio.exists(spark, _manifest_path(table_path, to_gen)):
         raise FileNotFoundError(
             f"no manifest for generation {to_gen} at {table_path} "
             "(never committed, or removed by snapshot_vacuum)"
@@ -4171,7 +4148,7 @@ def snapshot_clone(
         rel: _gen_base(src_abs, g)
         for rel, g in manifest["partitions"].items()
     }
-    _fs_mkdirs(spark, clone_path)
+    fsio.mkdirs(spark, clone_path)
     # clones inherit TABLE METADATA (Delta clones carry table
     # properties): stats config so clone-local generations write
     # skipping sidecars, CHECK constraints, generated columns
@@ -4183,8 +4160,8 @@ def snapshot_clone(
         _LEDGER_RETENTION_CONF,
     ):
         sp = f"{src_abs}/{conf}"
-        if _fs_exists(spark, sp):
-            _write_text(spark, f"{clone_path}/{conf}", _read_text(spark, sp))
+        if fsio.exists(spark, sp):
+            fsio.write_text(spark, f"{clone_path}/{conf}", fsio.read_text(spark, sp))
     # register BEFORE the clone's commit at EVERY table whose
     # generations it will reference — the direct source, and (for a
     # clone-of-clone) any deeper original the source itself still
@@ -4196,7 +4173,7 @@ def snapshot_clone(
         # ref resolves to a plain directory whose "root" is the
         # caller's space; nothing ever GCs there, so no breadcrumb
         # (and no stray _clones/ dir dropped outside the engine)
-        if _fs_exists(spark, f"{ref_root}/_manifests"):
+        if fsio.exists(spark, f"{ref_root}/_manifests"):
             _register_clone(spark, ref_root, clone_path)
     clone_extra = {"cloned_from": src_abs, "cloned_gen": cur}
     # a fresh table has no predecessor manifest to carry from —
@@ -4288,7 +4265,7 @@ def snapshot_convert_from_parquet(
     _claim_recover(spark, table_path)
     if _current_gen(spark, table_path) is not None:
         raise FileExistsError(f"table already exists: {table_path}")
-    if not _fs_exists(spark, src_abs):
+    if not fsio.exists(spark, src_abs):
         raise FileNotFoundError(f"no parquet directory at {src_abs}")
     # the ONE inference read: its schema (including partition-column
     # types) is stored in the manifest and pins every later read
@@ -4325,7 +4302,7 @@ def snapshot_convert_from_parquet(
         partitions = {r: src_abs for r in rels}
     else:
         partitions = {"": src_abs}
-    _fs_mkdirs(spark, table_path)
+    fsio.mkdirs(spark, table_path)
     if collect_stats:
         cols = stats_cols
         if cols is None:
@@ -4371,7 +4348,7 @@ def snapshot_table_detail(spark: SparkSession, table_path: str) -> dict:
     n_bytes = 0
     for g in gens:
         base = _gen_base(table_path, g)
-        fs, p = _hfs(spark, base)
+        fs, p = fsio.handle(spark, base)
         if not fs.exists(p):
             continue
         it = fs.listFiles(p, True)
@@ -4404,10 +4381,10 @@ def snapshot_table_detail(spark: SparkSession, table_path: str) -> dict:
         "dv_rows": sum(len(v) for v in dv.values()),
         "op": manifest.get("op"),
         "stats_enabled": _stats_conf(spark, table_path) is not None,
-        "has_constraints": _fs_exists(
+        "has_constraints": fsio.exists(
             spark, f"{table_path}/{_CONSTRAINTS_CONF}"
         ),
-        "has_generated_columns": _fs_exists(
+        "has_generated_columns": fsio.exists(
             spark, f"{table_path}/{_GENERATED_CONF}"
         ),
         "cloned_from": manifest.get("cloned_from"),
@@ -4437,7 +4414,7 @@ def snapshot_table_detail(spark: SparkSession, table_path: str) -> dict:
 
 
 def _count_clone_registrations(spark, table_path: str) -> int:
-    fs, cdir = _hfs(spark, f"{table_path}/{_CLONES_DIR}")
+    fs, cdir = fsio.handle(spark, f"{table_path}/{_CLONES_DIR}")
     if not fs.exists(cdir):
         return 0
     return sum(
@@ -4476,14 +4453,14 @@ def snapshot_consume_changes(
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
     acked = None
-    if _fs_exists(spark, cursor_path):
-        acked = int(_read_text(spark, cursor_path).strip())
+    if fsio.exists(spark, cursor_path):
+        acked = int(fsio.read_text(spark, cursor_path).strip())
 
     def ack(to_gen=cur):
         tmp = f"{cursor_path}__tmp"
-        _write_text(spark, tmp, str(to_gen))
-        _fs_delete(spark, cursor_path)
-        _fs_rename(spark, tmp, cursor_path)
+        fsio.write_text(spark, tmp, str(to_gen))
+        fsio.delete(spark, cursor_path)
+        fsio.rename(spark, tmp, cursor_path)
 
     if acked is not None and acked == cur:
         return {"changes": None, "from_gen": acked, "to_gen": cur,
@@ -4496,7 +4473,7 @@ def snapshot_consume_changes(
         )
         return {"changes": boot, "from_gen": None, "to_gen": cur,
                 "ack": ack}
-    if not _fs_exists(spark, _manifest_path(table_path, acked)):
+    if not fsio.exists(spark, _manifest_path(table_path, acked)):
         raise FileNotFoundError(
             f"cursor at generation {acked} fell behind the vacuum "
             f"retention window of {table_path}; delete {cursor_path} "
@@ -4526,8 +4503,8 @@ def snapshot_set_generated_columns(
     match the generation expression).  The standard use is a derived
     partition column (e.g. event date from a timestamp) that callers
     never have to remember to add."""
-    _fs_mkdirs(spark, table_path)
-    _write_text(
+    fsio.mkdirs(spark, table_path)
+    fsio.write_text(
         spark,
         f"{table_path}/{_GENERATED_CONF}",
         json.dumps({"columns": dict(columns)}, sort_keys=True),
@@ -4536,9 +4513,9 @@ def snapshot_set_generated_columns(
 
 def _generated_columns(spark, table_path: str) -> dict:
     p = f"{table_path}/{_GENERATED_CONF}"
-    if not _fs_exists(spark, p):
+    if not fsio.exists(spark, p):
         return {}
-    return json.loads(_read_text(spark, p))["columns"]
+    return json.loads(fsio.read_text(spark, p))["columns"]
 
 
 class SnapshotGeneratedColumnViolation(ValueError):
@@ -4606,8 +4583,8 @@ def snapshot_set_identity(
     values only guarantees no collision with values >= start."""
     if int(step) == 0:
         raise ValueError("identity step must be non-zero")
-    _fs_mkdirs(spark, table_path)
-    _write_text(
+    fsio.mkdirs(spark, table_path)
+    fsio.write_text(
         spark,
         f"{table_path}/{_IDENTITY_CONF}",
         json.dumps(
@@ -4619,9 +4596,9 @@ def snapshot_set_identity(
 
 def _identity_conf(spark, table_path: str) -> dict | None:
     p = f"{table_path}/{_IDENTITY_CONF}"
-    if not _fs_exists(spark, p):
+    if not fsio.exists(spark, p):
         return None
-    return json.loads(_read_text(spark, p))
+    return json.loads(fsio.read_text(spark, p))
 
 
 class SnapshotIdentityViolation(ValueError):
@@ -4843,8 +4820,8 @@ def snapshot_analyze(
             for c in cols
         },
     }
-    _fs_mkdirs(spark, f"{table_path}/_table_stats")
-    _write_text(
+    fsio.mkdirs(spark, f"{table_path}/_table_stats")
+    fsio.write_text(
         spark,
         f"{table_path}/_table_stats/{cur:08d}.json",
         json.dumps(out, sort_keys=True),
@@ -4858,7 +4835,7 @@ def snapshot_table_stats(
     """The newest persisted ANALYZE result plus ``stale`` (whether the
     table has committed past the generation it describes).  None when
     never analyzed."""
-    fs, d = _hfs(spark, f"{table_path}/_table_stats")
+    fs, d = fsio.handle(spark, f"{table_path}/_table_stats")
     if not fs.exists(d):
         return None
     gens = []
@@ -4873,7 +4850,7 @@ def snapshot_table_stats(
         return None
     g = max(gens)
     out = json.loads(
-        _read_text(spark, f"{table_path}/_table_stats/{g:08d}.json")
+        fsio.read_text(spark, f"{table_path}/_table_stats/{g:08d}.json")
     )
     out["stale"] = _current_gen(spark, table_path) != g
     return out

@@ -18,20 +18,23 @@ Parquet implementation with the same semantics:
   partitioned by (source, ingest_date), an hourly increment rewrites
   O(increment) data instead of O(table).
 
-Crash safety: each swap renames live -> ``__old``, staged -> live, then
-deletes ``__old``.  A crash between the two renames leaves ``__old``
-recoverable; the next ``merge_upsert``/``delete_keys`` call restores it
-automatically (``_recover``).
+Crash safety: every swap is ``fsio.swap_dir`` (live -> ``__old``,
+staged -> live, drop ``__old``), and every writer starts with
+``fsio.recover_tree``, which restores an ``__old`` a crash left at the
+root or under any partition directory.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from gpt_rag_ingestion_spark.operators import fsio
 
 # Characters Spark's ExternalCatalogUtils.escapePathName escapes when it
 # builds `col=value` partition directory names.
@@ -61,68 +64,6 @@ def _partition_rel_path(partition_cols: list[str], values) -> str:
     )
 
 
-def _hfs(spark: SparkSession, path: str):
-    """(FileSystem, Path) through the Hadoop API — the sink's swaps
-    and recovery must work on any scheme whose rename is atomic
-    (local, hdfs://, abfss://); see SCALE.md 'Sink transactionality'
-    for the contract and the S3 caveat."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf), p
-
-
-def _fs_exists(spark, path: str) -> bool:
-    fs, p = _hfs(spark, path)
-    return bool(fs.exists(p))
-
-
-def _fs_delete(spark, path: str) -> None:
-    fs, p = _hfs(spark, path)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
-def _fs_rename(spark, src: str, dst: str) -> None:
-    fs, ps = _hfs(spark, src)
-    _fs2, pd_ = _hfs(spark, dst)
-    if not fs.rename(ps, pd_):
-        raise OSError(f"rename failed: {src} -> {dst}")
-
-
-def _fs_mkdirs(spark, path: str) -> None:
-    fs, p = _hfs(spark, path)
-    fs.mkdirs(p)
-
-
-def _heal_partition_old_dirs(spark, table_path: str) -> None:
-    """Finish torn PER-PARTITION swaps: a crash inside
-    ``_swap_dir`` on one partition directory leaves
-    ``<table>/p=v__old`` with ``<table>/p=v`` missing (or both, if the
-    crash hit after the staged rename).  The root-level ``_recover``
-    never saw these (r4 gap) — walk the partition tree and apply the
-    same restore-or-garbage-collect rule to every ``__old`` dir."""
-    fs, root = _hfs(spark, table_path)
-    if not fs.exists(root):
-        return
-    stack = [root]
-    while stack:
-        d = stack.pop()
-        for st in fs.listStatus(d):
-            if not st.isDirectory():
-                continue
-            p = st.getPath()
-            name = p.getName()
-            if name.endswith("__old"):
-                live = p.getParent().suffix("/" + name[: -len("__old")])
-                if fs.exists(live):
-                    fs.delete(p, True)
-                else:
-                    fs.rename(p, live)
-            elif not name.endswith("__staging"):
-                stack.append(p)
-
-
 #: Sidecar pinning the LOGICAL partition-column types.  Read-back of a
 #: hive-partitioned parquet table otherwise re-infers those types from
 #: the directory NAMES — a string column whose current values all look
@@ -144,31 +85,20 @@ def _write_partition_types(
 ) -> None:
     """Persist the logical types of the partition columns (as a
     StructType JSON) at the table root.  Called AFTER every swap — the
-    root-level ``_swap_in`` replaces the whole directory, so a sidecar
+    root-level swap replaces the whole directory, so a sidecar
     written before the swap would vanish with the old generation."""
     fields = [schema[c] for c in partition_cols if c in schema.names]
-    if not fields:
-        return
-    fs, p = _hfs(spark, _sidecar_path(table_path))
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(StructType(fields).json().encode("utf-8")))
-    finally:
-        out.close()
+    if fields:
+        fsio.write_text(
+            spark, _sidecar_path(table_path), StructType(fields).json()
+        )
 
 
 def _read_partition_types(spark: SparkSession, table_path: str) -> StructType | None:
     path = _sidecar_path(table_path)
-    if not _fs_exists(spark, path):
+    if not fsio.exists(spark, path):
         return None
-    jvm = spark.sparkContext._jvm
-    fs, p = _hfs(spark, path)
-    stm = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stm, "UTF-8")
-    finally:
-        stm.close()
-    return StructType.fromJson(json.loads(text))
+    return StructType.fromJson(json.loads(fsio.read_text(spark, path)))
 
 
 #: Re-entrant, THREAD-SAFE toggle for partition-column type inference.
@@ -228,18 +158,26 @@ def _read_table(
     return df
 
 
-def _recover(spark: SparkSession, table_path: str) -> None:
-    """Heal an interrupted swap: if the live table vanished mid-swap,
-    restore the ``__old`` generation; if both exist, the swap completed
-    and ``__old`` is leftover garbage.  Then heal any torn
-    per-partition swap the same way (partitioned-merge crash window)."""
-    old = table_path.rstrip("/") + "__old"
-    if _fs_exists(spark, old):
-        if _fs_exists(spark, table_path):
-            _fs_delete(spark, old)
-        else:
-            _fs_rename(spark, old, table_path)
-    _heal_partition_old_dirs(spark, table_path)
+def read_existing(
+    spark: SparkSession, table_path: str, pin: StructType | None = None
+) -> DataFrame | None:
+    """The table at ``table_path``, or None when there is none: the
+    root does not exist, or it holds only hidden files such as the
+    partition-types sidecar and ``_SUCCESS`` (every partition was
+    deleted).  Any other read error propagates — an unreadable table
+    is never taken for an absent one, which would let the next write
+    replace it with the increment."""
+    if not fsio.exists(spark, table_path):
+        return None
+    try:
+        return _read_table(spark, table_path, pin)
+    except Exception:
+        if all(
+            st.getPath().getName().startswith(("_", "."))
+            for st in fsio.list(spark, table_path)
+        ):
+            return None
+        raise
 
 
 def merged_view(
@@ -254,6 +192,45 @@ def merged_view(
     return kept.unionByName(incoming, allowMissingColumns=True)
 
 
+def _in_partitions(partition_cols: list[str], affected: list[tuple]):
+    """An OR of per-partition equality conjunctions — the predicate
+    shape Catalyst prunes the scan of ``existing`` with."""
+
+    def _match(values):
+        terms = [
+            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
+            for c, v in zip(partition_cols, values)
+        ]
+        return functools.reduce(lambda a, b: a & b, terms)
+
+    return functools.reduce(lambda a, b: a | b, [_match(v) for v in affected])
+
+
+def _swap_partitions(
+    spark: SparkSession, tmp: str, table_path: str,
+    partition_cols: list[str], affected: list[tuple], schema: StructType,
+) -> None:
+    """Swap ONLY the affected partition directories of the staged
+    rewrite at ``tmp`` into the table; untouched partitions' files are
+    never rewritten (the property the 100 TB design needs).  Dedup by
+    RESOLVED path: '' and NULL partition values share one Hive-default
+    directory, and swapping the same dir twice would find the staging
+    gone and delete the live data."""
+    for rel in sorted({_partition_rel_path(partition_cols, v) for v in affected}):
+        staged_dir = f"{tmp}/{rel}"
+        live_dir = f"{table_path.rstrip('/')}/{rel}"
+        if fsio.exists(spark, staged_dir):
+            fsio.mkdirs(spark, live_dir.rsplit("/", 1)[0])
+            fsio.swap_dir(spark, staged_dir, live_dir)
+        else:
+            # the partition is empty after the rewrite (its rows were
+            # deleted or re-ingested elsewhere): drop the stale dir
+            fsio.delete(spark, live_dir)
+    fsio.delete(spark, tmp)
+    _write_partition_types(spark, table_path, schema, partition_cols)
+    spark.catalog.refreshByPath(table_path)
+
+
 def merge_upsert(
     spark: SparkSession,
     table_path: str,
@@ -264,7 +241,7 @@ def merge_upsert(
     """Replace all rows whose ``key`` appears in ``incoming`` with the
     incoming rows; keep everything else.  Equivalent to the reference's
     delete-parent-then-upload (S11+S10) and to Delta MERGE."""
-    _recover(spark, table_path)
+    fsio.recover_tree(spark, table_path)
     # Pin partition-column types on read-back: stored sidecar first,
     # else the incoming frame's logical types (legacy tables written
     # before the sidecar existed).  Without the pin, Spark re-infers
@@ -278,20 +255,16 @@ def merge_upsert(
                 [incoming.schema[c] for c in partition_cols
                  if c in incoming.columns]
             )
-    try:
-        existing = _read_table(spark, table_path, pin)
-        have_existing = True
-    except Exception:
-        have_existing = False
+    existing = read_existing(spark, table_path, pin)
 
     tmp = table_path.rstrip("/") + "__staging"
 
-    if not have_existing:
+    if existing is None:
         writer = incoming.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(tmp)
-        _swap_in(spark, tmp, table_path)
+        fsio.swap_dir(spark, tmp, table_path)
         if partition_cols:
             _write_partition_types(
                 spark, table_path, incoming.schema, partition_cols
@@ -304,7 +277,7 @@ def merge_upsert(
         out = merged_view(existing, incoming, key)
         # local parquet cannot overwrite a path being read: stage then swap
         out.write.mode("overwrite").parquet(tmp)
-        _swap_in(spark, tmp, table_path)
+        fsio.swap_dir(spark, tmp, table_path)
         return
 
     # ---- partition-pruned path ----
@@ -325,42 +298,14 @@ def merge_upsert(
     if not affected:
         return  # empty increment: nothing to do
 
-    # Replacement data for affected partitions only — the scan of
-    # `existing` is partition-pruned by the predicate below (an OR of
-    # per-partition equality conjunctions, the shape Catalyst prunes).
-    import functools
-
-    def _match(values):
-        terms = [
-            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-            for c, v in zip(partition_cols, values)
-        ]
-        return functools.reduce(lambda a, b: a & b, terms)
-
-    pred = functools.reduce(lambda a, b: a | b, [_match(v) for v in affected])
-    kept = existing.filter(pred).join(F.broadcast(keys), on=key, how="left_anti")
+    # Replacement data for affected partitions only (partition-pruned
+    # scan of `existing`).
+    kept = existing.filter(_in_partitions(partition_cols, affected)).join(
+        F.broadcast(keys), on=key, how="left_anti"
+    )
     out = kept.unionByName(incoming, allowMissingColumns=True)
     out.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-
-    # Swap ONLY the affected partition directories; untouched partitions'
-    # files are never rewritten (the property the 100 TB design needs).
-    # Dedup by RESOLVED path: '' and NULL partition values share one
-    # Hive-default directory, and swapping the same dir twice would
-    # find the staging gone and delete the live data.
-    rels = sorted({_partition_rel_path(partition_cols, v) for v in affected})
-    for rel in rels:
-        staged_dir = f"{tmp}/{rel}"
-        live_dir = f"{table_path.rstrip('/')}/{rel}"
-        if _fs_exists(spark, staged_dir):
-            _fs_mkdirs(spark, live_dir.rsplit("/", 1)[0])
-            _swap_dir(spark, staged_dir, live_dir)
-        elif _fs_exists(spark, live_dir):
-            # partition became empty after the merge (all its rows were
-            # re-ingested keys that moved elsewhere): drop the stale dir
-            _fs_delete(spark, live_dir)
-    _fs_delete(spark, tmp)
-    _write_partition_types(spark, table_path, out.schema, partition_cols)
-    spark.catalog.refreshByPath(table_path)
+    _swap_partitions(spark, tmp, table_path, partition_cols, affected, out.schema)
 
 
 def delete_keys(
@@ -376,9 +321,7 @@ def delete_keys(
     doomed keys are rewritten (the same replaceWhere-shaped pruning as
     ``merge_upsert``) — a purge of K vanished parents rewrites
     O(partitions touched), never O(table)."""
-    import functools
-
-    _recover(spark, table_path)
+    fsio.recover_tree(spark, table_path)
     pin = _read_partition_types(spark, table_path) if partition_cols else None
     existing = _read_table(spark, table_path, pin)
     key_set = keys.select(key).distinct()
@@ -387,7 +330,7 @@ def delete_keys(
     if not partition_cols:
         kept = existing.join(F.broadcast(key_set), on=key, how="left_anti")
         kept.write.mode("overwrite").parquet(tmp)
-        _swap_in(spark, tmp, table_path)
+        fsio.swap_dir(spark, tmp, table_path)
         return
 
     affected = [
@@ -400,53 +343,11 @@ def delete_keys(
     if not affected:
         return  # no partition holds a doomed key: nothing to rewrite
 
-    def _match(values):
-        terms = [
-            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-            for c, v in zip(partition_cols, values)
-        ]
-        return functools.reduce(lambda a, b: a & b, terms)
-
-    pred = functools.reduce(lambda a, b: a | b, [_match(v) for v in affected])
-    kept = existing.filter(pred).join(
+    kept = existing.filter(_in_partitions(partition_cols, affected)).join(
         F.broadcast(key_set), on=key, how="left_anti"
     )
     kept.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    rels = sorted({_partition_rel_path(partition_cols, v) for v in affected})
-    for rel in rels:  # dedup: ''/NULL share the Hive default dir
-        staged_dir = f"{tmp}/{rel}"
-        live_dir = f"{table_path.rstrip('/')}/{rel}"
-        if _fs_exists(spark, staged_dir):
-            _fs_mkdirs(spark, live_dir.rsplit("/", 1)[0])
-            _swap_dir(spark, staged_dir, live_dir)
-        elif _fs_exists(spark, live_dir):
-            # every row of this partition was deleted: drop the dir
-            _fs_delete(spark, live_dir)
-    _fs_delete(spark, tmp)
-    _write_partition_types(spark, table_path, kept.schema, partition_cols)
-    spark.catalog.refreshByPath(table_path)
-
-
-def _swap_dir(spark: SparkSession, staged: str, live: str) -> None:
-    """Crash-safe directory swap (no Spark cache concerns — callers
-    refresh the table root afterwards)."""
-    old = live.rstrip("/") + "__old"
-    _fs_delete(spark, old)
-    if _fs_exists(spark, live):
-        _fs_rename(spark, live, old)
-    _fs_rename(spark, staged, live)
-    _fs_delete(spark, old)
-
-
-def _swap_in(spark: SparkSession, staged: str, table_path: str) -> None:
-    """Rename-rename-delete swap: the committed table is never destroyed
-    before its replacement is in place (a crash mid-swap leaves either
-    the old table or a recoverable ``__old`` directory, which the next
-    call's ``_recover`` restores — never nothing).  On a real deployment
-    Delta/Iceberg transactions replace this."""
-    _swap_dir(spark, staged, table_path)
-    # drop the session's cached file listing for the old generation
-    spark.catalog.refreshByPath(table_path)
+    _swap_partitions(spark, tmp, table_path, partition_cols, affected, kept.schema)
 
 
 def _list_parquet_files(spark, table_path: str) -> list[tuple[str, int]]:
@@ -455,10 +356,7 @@ def _list_parquet_files(spark, table_path: str) -> list[tuple[str, int]]:
     s3a://) — os.walk sees only the driver-local filesystem and would
     silently report 0 files there, disarming the OPTIMIZE trigger.
     Metadata listing only, no Spark job."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = p.getFileSystem(hconf)
+    fs, p = fsio.handle(spark, table_path)
     if not fs.exists(p):
         return []
     out = []
@@ -518,7 +416,7 @@ def compact_table(
     the explicit read → repartition → swap."""
     import math
 
-    _recover(spark, table_path)
+    fsio.recover_tree(spark, table_path)
     listed = _list_parquet_files(spark, table_path)
     files_before = len(listed)
     total = sum(sz for _p, sz in listed)
@@ -557,7 +455,7 @@ def compact_table(
         )
     else:
         existing.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    _swap_in(spark, tmp, table_path)
+    fsio.swap_dir(spark, tmp, table_path)
     if partition_cols:
         # the root swap replaced the whole directory, sidecar included
         _write_partition_types(spark, table_path, existing.schema, partition_cols)

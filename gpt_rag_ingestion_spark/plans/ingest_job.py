@@ -28,12 +28,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.chunking.pipeline import chunk_documents
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators.freshness import (
     freshness_candidates,
     index_watermarks,
 )
 from gpt_rag_ingestion_spark.operators.ops_log import apply_blocklist, run_summary
-from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+from gpt_rag_ingestion_spark.operators.upsert import merge_upsert, read_existing
+
+
+def read_sink_table(spark: SparkSession, table_path: str, sink: str):
+    """The committed table under ``sink`` ("swap" or "snapshot"), or
+    None when there is none yet.  Existence is probed (the table root,
+    or the snapshot pointer), never inferred from a failed read: any
+    error reading an existing table propagates."""
+    if sink == "snapshot":
+        from gpt_rag_ingestion_spark.operators.snapshot_table import (
+            read_snapshot_table,
+        )
+
+        # a commit that died between its pointer delete and rename
+        # leaves only _current__tmp, which readers resolve
+        if not (
+            fsio.exists(spark, f"{table_path}/_current")
+            or fsio.exists(spark, f"{table_path}/_current__tmp")
+        ):
+            return None
+        return read_snapshot_table(spark, table_path)
+    return read_existing(spark, table_path)
 
 
 def run_ingest_job(
@@ -150,25 +172,14 @@ def run_ingest_job(
     if sink not in ("swap", "snapshot"):
         raise ValueError(f"sink must be 'swap' or 'snapshot', got {sink!r}")
 
-    def _read_chunks_table():
-        if sink == "snapshot":
-            from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                read_snapshot_table,
-            )
-
-            return read_snapshot_table(spark, table_path)
-        return spark.read.parquet(table_path)
-
     _t_wall = _time.monotonic()
     # 1. index-state watermarks from the existing chunks table (A1/S9)
-    try:
-        chunks_table = _read_chunks_table()
+    chunks_table = read_sink_table(spark, table_path, sink)
+    have_table = chunks_table is not None
+    if have_table:
         watermarks = index_watermarks(
             chunks_table, key="parent_id", ts="metadata_storage_last_modified"
         )
-        have_table = True
-    except Exception:
-        have_table = False
 
     from gpt_rag_ingestion_spark.functions.keys import sanitize_key
 
@@ -306,11 +317,7 @@ def run_ingest_job(
             text_index_apply,
             text_index_maybe_compact,
         )
-        from gpt_rag_ingestion_spark.operators.similarity import (
-            jvm_fs_exists,
-        )
-
-        if jvm_fs_exists(spark, f"{text_index_path}/meta"):
+        if fsio.recover(spark, f"{text_index_path}/meta"):
             with _sp("search_index", run=run_id):
                 old_ids = (
                     chunks_table.join(
@@ -384,9 +391,7 @@ def run_ingest_job(
     upload_sec = round(_time.monotonic() - _t_upload, 3)
 
     if rollup_staging is not None:
-        from gpt_rag_ingestion_spark.operators.upsert import _swap_in
-
-        _swap_in(spark, rollup_staging, rollup_path)
+        fsio.swap_dir(spark, rollup_staging, rollup_path)
 
     if tindex_bootstrap:
         from gpt_rag_ingestion_spark.operators.search import (
@@ -395,7 +400,7 @@ def run_ingest_job(
 
         with _sp("search_index", run=run_id):
             text_index_build(
-                _read_chunks_table().select(
+                read_sink_table(spark, table_path, sink).select(
                     F.xxhash64(F.col("id")).alias("chunk_doc"),
                     F.col("content").alias("text"),
                 ),
@@ -429,9 +434,8 @@ def _stage_rollup(spark, rollup_path, old_table, incoming):
     one-time recompute over the existing table (bootstrap).  Returns
     the staging path; caller swaps it in after the chunks merge."""
     from gpt_rag_ingestion_spark.operators.incremental import maintain_rollup
-    from gpt_rag_ingestion_spark.operators.upsert import _recover
 
-    _recover(spark, rollup_path)
+    fsio.recover_tree(spark, rollup_path)
     rows_in = incoming.select(
         "parent_id", F.length("content").cast("long").alias("chars")
     )

@@ -32,22 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.functions.urls import canonical_url, url_domain
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators.dedup import incremental_dedup
 from gpt_rag_ingestion_spark.operators.ranking import per_key_capped_rank
 from gpt_rag_ingestion_spark.operators.shards import write_training_shards
 from gpt_rag_ingestion_spark.operators.text_analysis import bpe_ish_token_count
 from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
-
-
-def _read_corpus(spark, corpus_path: str, corpus_sink: str):
-    """Corpus table read under the selected commit protocol."""
-    if corpus_sink == "snapshot":
-        from gpt_rag_ingestion_spark.operators.snapshot_table import (
-            read_snapshot_table,
-        )
-
-        return read_snapshot_table(spark, corpus_path)
-    return spark.read.parquet(corpus_path)
+from gpt_rag_ingestion_spark.plans.ingest_job import read_sink_table
 
 
 def run_web_corpus_job(
@@ -171,9 +162,7 @@ def run_web_corpus_job(
     candidates = staged.filter(F.col("_fd").isNull()).select(id_col, text_col)
     use_sidecar = False
     if sidecar_path is not None:
-        from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_exists
-
-        use_sidecar = jvm_fs_exists(spark, f"{sidecar_path}/meta")
+        use_sidecar = fsio.recover(spark, f"{sidecar_path}/meta")
     if use_sidecar:
         from gpt_rag_ingestion_spark.operators.dedup import (
             incremental_dedup_sidecar,
@@ -184,12 +173,11 @@ def run_web_corpus_job(
             threshold=near_dup_threshold,
         )
     else:
-        try:
-            base = _read_corpus(spark, corpus_path, corpus_sink).select(
-                id_col, text_col
-            )
-        except Exception:
-            base = candidates.limit(0)
+        base = read_sink_table(spark, corpus_path, corpus_sink)
+        base = (
+            candidates.limit(0) if base is None
+            else base.select(id_col, text_col)
+        )
         decisions = incremental_dedup(
             base, candidates, text_col=text_col, id_col=id_col,
             threshold=near_dup_threshold,
@@ -307,7 +295,7 @@ def run_web_corpus_job(
                 # enabled on a pre-existing corpus must index what is
                 # already there, not just this batch's admissions
                 dedup_sidecar_build(
-                    _read_corpus(spark, corpus_path, corpus_sink).select(
+                    read_sink_table(spark, corpus_path, corpus_sink).select(
                         id_col, text_col
                     ),
                     sidecar_path, text_col=text_col, id_col=id_col,
@@ -318,11 +306,7 @@ def run_web_corpus_job(
                 text_index_build,
                 text_index_maybe_compact,
             )
-            from gpt_rag_ingestion_spark.operators.similarity import (
-                jvm_fs_exists,
-            )
-
-            if jvm_fs_exists(spark, f"{text_index_path}/meta"):
+            if fsio.recover(spark, f"{text_index_path}/meta"):
                 # replay-idempotent per batch_label (the reference
                 # indexer's upsert of the same docs into its search
                 # index); the counter trigger folds superseded rows
@@ -334,7 +318,7 @@ def run_web_corpus_job(
             else:
                 # bootstrap from the POST-MERGE corpus, like the sidecar
                 text_index_build(
-                    _read_corpus(spark, corpus_path, corpus_sink).select(
+                    read_sink_table(spark, corpus_path, corpus_sink).select(
                         id_col, text_col
                     ),
                     text_index_path, text_col=text_col, id_col=id_col,

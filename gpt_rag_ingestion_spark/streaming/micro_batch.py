@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.chunking.pipeline import chunk_documents
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
 
 
@@ -117,19 +118,12 @@ def run_incremental_ingest(
         )
         staging = None
         if rollup_path is not None and rollup_mode == "stage":
-            from gpt_rag_ingestion_spark.plans.ingest_job import _stage_rollup
+            from gpt_rag_ingestion_spark.plans.ingest_job import (
+                _stage_rollup,
+                read_sink_table,
+            )
 
-            try:
-                if sink == "snapshot":
-                    from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                        read_snapshot_table,
-                    )
-
-                    old_table = read_snapshot_table(spark, table_path)
-                else:
-                    old_table = spark.read.parquet(table_path)
-            except Exception:
-                old_table = None
+            old_table = read_sink_table(spark, table_path, sink)
             # foreachBatch sources are one-shot plans — pin the batch
             # so both the rollup delta and the merge see the same rows
             chunks = chunks.localCheckpoint()
@@ -162,9 +156,7 @@ def run_incremental_ingest(
                 partition_cols=partition_cols,
             )
         if staging is not None:
-            from gpt_rag_ingestion_spark.operators.upsert import _swap_in
-
-            _swap_in(spark, staging, rollup_path)
+            fsio.swap_dir(spark, staging, rollup_path)
         if rollup_path is not None and rollup_mode == "cdf":
             from gpt_rag_ingestion_spark.operators.incremental import (
                 maintain_snapshot_rollup,
@@ -254,11 +246,7 @@ def run_streaming_web_corpus(
             return
         prior_counts = None
         if domain_counts_path is not None:
-            from gpt_rag_ingestion_spark.operators.similarity import (
-                jvm_fs_exists,
-            )
-
-            if jvm_fs_exists(spark, domain_counts_path):
+            if fsio.exists(spark, domain_counts_path):
                 prior_counts = (
                     spark.read.parquet(domain_counts_path)
                     # replay safety: this batch's own counts from a
@@ -435,10 +423,10 @@ def run_incremental_sketch(
 
     This is the 100 TB pattern for every mergeable summary here
     (histogram, KMV, count-min): shard-local sketch + cell merge,
-    state bounded by bins x groups regardless of stream length."""
-    import os
-    import shutil
-
+    state bounded by bins x groups regardless of stream length.
+    Each merge swaps the table in with ``fsio.swap_dir``; every batch
+    first runs ``fsio.recover_dir``, so a crash between the swap's
+    renames never loses the prior counts."""
     span = float(hi) - float(lo)
     stream = spark.readStream.schema(schema).format("json").load(landing_dir)
 
@@ -458,26 +446,19 @@ def run_incremental_sketch(
             .groupBy("event_type", "bin")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        try:
-            current = spark.read.parquet(sketch_table)
+        fsio.recover_dir(spark, sketch_table)
+        if fsio.exists(spark, sketch_table):
             merged = (
-                current.unionByName(delta)
+                spark.read.parquet(sketch_table)
+                .unionByName(delta)
                 .groupBy("event_type", "bin")
                 .agg(F.sum("c").cast("long").alias("c"))
             )
-        except Exception:
+        else:
             merged = delta.withColumn("c", F.col("c").cast("long"))
         tmp = sketch_table.rstrip("/") + "__staging"
         merged.write.mode("overwrite").parquet(tmp)
-        old = sketch_table.rstrip("/") + "__old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(sketch_table):
-            os.rename(sketch_table, old)
-        os.rename(tmp, sketch_table)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        spark.catalog.refreshByPath(sketch_table)
+        fsio.swap_dir(spark, tmp, sketch_table)
 
     (
         stream.writeStream.foreachBatch(process_batch)
@@ -697,7 +678,6 @@ def run_incremental_ivf(
         ivf_index_append,
         ivf_index_build,
         ivf_index_maybe_compact,
-        jvm_fs_exists,
     )
 
     stream = spark.readStream.schema(schema).format("json").load(landing_dir)
@@ -707,7 +687,7 @@ def run_incremental_ivf(
             return
         # scheme-aware existence check — a driver-local os.path.exists
         # is always False for hdfs://abfss://s3a:// index paths
-        if not jvm_fs_exists(spark, f"{index_path}/centroids"):
+        if not fsio.exists(spark, f"{index_path}/centroids"):
             # the build batch is labeled by ITS batch id: a foreachBatch
             # retry of this batch (centroids now existing) takes the
             # append path with the same label and overwrites the same

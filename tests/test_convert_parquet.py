@@ -195,6 +195,7 @@ def test_convert_crash_legs(spark, tmp_path, monkeypatch):
             except Exception:
                 pass
             killer.disarm()
+            assert killer.fired, f"kill@{k} never fired: {killer.log}"
             # reader invariant: absent or complete, never torn
             cur = S._current_gen(spark, t)
             if cur is not None:

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
 
@@ -227,7 +228,7 @@ def test_vacuum_removes_dead_sidecars(spark, tmp_path):
     S.snapshot_enable_stats(spark, tbl, cols=["v"])
     S.snapshot_merge_upsert(spark, tbl, _clustered(spark, n=500))
     S.snapshot_optimize(spark, tbl)
-    fs, d = S._hfs(spark, f"{tbl}/{S._STATS_DIR}")
+    fs, d = fsio.handle(spark, f"{tbl}/{S._STATS_DIR}")
     assert len(list(fs.listStatus(d))) == 2
     S.snapshot_vacuum(spark, tbl)
     live = [st.getPath().getName() for st in fs.listStatus(d)]

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
 
@@ -46,7 +47,7 @@ def test_dv_touches_no_data_files(spark, tmp_path):
         spark, tbl, _df(spark), partition_cols=["bucket"]
     )
     man1 = S._read_manifest(spark, tbl, g1)["partitions"]
-    fs, root = S._hfs(spark, f"{tbl}/{list(man1.values())[0]}")
+    fs, root = fsio.handle(spark, f"{tbl}/{list(man1.values())[0]}")
     before = sorted(
         (st.getPath().getName(), st.getLen(), st.getModificationTime())
         for st in fs.listStatus(root)
@@ -187,7 +188,7 @@ def test_dv_vacuum_and_guards(spark, tmp_path):
             spark.range(lo, lo + 50).select(F.col("id").alias("parent_id")),
             partition_cols=["bucket"], mode="dv",
         )
-    fs, dvdir = S._hfs(spark, f"{tbl}/{S._DV_DIR}")
+    fs, dvdir = fsio.handle(spark, f"{tbl}/{S._DV_DIR}")
     assert len(list(fs.listStatus(dvdir))) == 2  # two accumulations
     S.snapshot_vacuum(spark, tbl)
     live = [st.getPath().getName() for st in fs.listStatus(dvdir)]
@@ -234,7 +235,7 @@ def test_dv_delete_crash_legs(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(S, "_commit", real_commit)
     # table unchanged; the orphan DV file exists but is unreferenced
     assert _rows(S.read_snapshot_table(spark, tbl)) == before
-    fs, dvdir = S._hfs(spark, f"{tbl}/{S._DV_DIR}")
+    fs, dvdir = fsio.handle(spark, f"{tbl}/{S._DV_DIR}")
     assert len(list(fs.listStatus(dvdir))) == 1  # the orphan
 
     # retry succeeds (claim recovery prunes nothing here — the crash

@@ -25,6 +25,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
 
@@ -135,8 +136,8 @@ def test_ledger_retention_grandfathers_pre_age_manifests(spark, tmp_path):
     m.pop("txn_gen", None)
     import json
 
-    S._fs_delete(spark, S._manifest_path(t, cur))
-    S._write_text(
+    fsio.delete(spark, S._manifest_path(t, cur))
+    fsio.write_text(
         spark, S._manifest_path(t, cur), json.dumps(m, sort_keys=True)
     )
     S.snapshot_set_ledger_retention(spark, t, 3)

@@ -31,9 +31,14 @@ def test_dataframe_debugging_disabled_after_ship(spark):
 
     from gpt_rag_ingestion_spark.session import ship_package
 
+    # canary: session.py pokes this private PySpark attribute; if a
+    # PySpark upgrade moves it, the poke silently does nothing
+    assert hasattr(eu, "_enable_debugging_cache"), (
+        "pyspark.errors.utils._enable_debugging_cache is gone "
+        "(checked against PySpark 4.1.2); update session.ship_package"
+    )
     ship_package(spark)
-    if hasattr(eu, "_enable_debugging_cache"):
-        assert eu._enable_debugging_cache is False
+    assert eu._enable_debugging_cache is False
 
 
 def test_minhash_expr_forms_match_column_forms(spark):

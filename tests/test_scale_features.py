@@ -1576,9 +1576,12 @@ def test_sketch_rerank_recall_floor_clustered(spark):
     deterministic (fixed corpus, fixed sign matrix), measured 0.674 —
     floor with margin.  The sketch is the cheap pre-filter; IVF/IVFPQ
     remain the recall-critical paths (their own floors above)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+    )
     from ann_recall_curve import clustered_embeddings
 
     from gpt_rag_ingestion_spark.operators.similarity import (

@@ -458,7 +458,7 @@ def test_query_path_never_prunes_inflight_writer_dirs(spark, tmp_path):
     leave the writer's directories untouched, so the writer's later
     meta commit references intact data."""
     from gpt_rag_ingestion_spark.operators import search as X
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_exists
+    from gpt_rag_ingestion_spark.operators.fsio import exists
 
     path = str(tmp_path / "tindex")
     X.text_index_build(_corpus(spark, BASE_ROWS), path)
@@ -481,7 +481,7 @@ def test_query_path_never_prunes_inflight_writer_dirs(spark, tmp_path):
         ).collect()
     )
     assert got == want  # committed snapshot only (gen filter)
-    assert jvm_fs_exists(spark, pdir) and jvm_fs_exists(spark, ddir)
+    assert exists(spark, pdir) and exists(spark, ddir)
 
     # the writer retries its append (writer-side recovery prunes the
     # staged dirs and replays) — converges to the post-append state

@@ -35,11 +35,12 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
 #: every metadata-plane mutation primitive the commit protocol uses
-_MUTATORS = ("_write_text", "_write_text_exclusive", "_fs_delete",
-             "_fs_rename")
+_MUTATORS = ((fsio, "write_text"), (S, "_write_text_exclusive"),
+             (fsio, "delete"), (fsio, "rename"))
 
 
 class _Killer:
@@ -59,9 +60,9 @@ class _Killer:
         self.fired_thread: int | None = None
         self.enabled = False
         self.log: list[tuple[int, str, str]] = []
-        for name in _MUTATORS:
-            real = getattr(S, name)
-            monkeypatch.setattr(S, name, self._wrap(name, real))
+        for mod, name in _MUTATORS:
+            real = getattr(mod, name)
+            monkeypatch.setattr(mod, name, self._wrap(name, real))
 
     def _wrap(self, name, real):
         def fn(spark, *a, **kw):
@@ -186,6 +187,7 @@ def test_merge_commit_kill_sweep(spark, tmp_path, monkeypatch, when, hard):
             assert "injected kill" in str(e)
             raised = True
         killer.disarm()
+        assert killer.fired, f"kill@{k} never fired: {killer.log}"
         # (a) reader: old or new snapshot, never neither.  A kill the
         # protocol SWALLOWS (the post-atomic-point rename self-heal)
         # must have completed the commit — reader sees NEW then.
@@ -289,6 +291,7 @@ def test_rebase_commit_kill_sweep(spark, tmp_path, monkeypatch, hard):
             assert "injected kill" in str(e)
             raised = True
         killer.disarm()
+        assert killer.fired, f"kill@{k} never fired: {killer.log}"
         uninstall()
         got = _rows(spark, t)
         if raised:
@@ -344,6 +347,7 @@ def test_vacuum_kill_sweep(spark, tmp_path, monkeypatch, hard):
         except RuntimeError as e:
             assert "injected kill" in str(e)
         killer.disarm()
+        assert killer.fired, f"kill@{k} never fired: {killer.log}"
         assert _rows(spark, t) == expect, f"vacuum kill@{k} broke reads"
         time.sleep(0.6)
         S.snapshot_vacuum(spark, t, keep_snapshots=1)
@@ -405,6 +409,7 @@ def test_delete_keys_kill_sweep(spark, tmp_path, monkeypatch, mode, hard):
             assert "injected kill" in str(e)
             raised = True
         killer.disarm()
+        assert killer.fired, f"kill@{k} never fired: {killer.log}"
         got = _rows(spark, t)
         if raised:
             assert got in (old_rows, new_rows), (
@@ -458,6 +463,7 @@ def test_optimize_kill_sweep(spark, tmp_path, monkeypatch, hard):
         except RuntimeError as e:
             assert "injected kill" in str(e)
         killer.disarm()
+        assert killer.fired, f"kill@{k} never fired: {killer.log}"
         assert _rows(spark, t) == expect, f"optimize kill@{k} broke reads"
         time.sleep(0.6)
         S.snapshot_optimize(spark, t, partition_cols=["bucket"])
@@ -520,6 +526,7 @@ def test_identity_ledger_merge_kill_sweep(spark, tmp_path, monkeypatch, hard):
             assert "injected kill" in str(e)
             raised = True
         killer.disarm()
+        assert killer.fired, f"kill@{k} never fired: {killer.log}"
         got = _rows(spark, t)
         if raised:
             assert got in (old_rows, new_rows), (

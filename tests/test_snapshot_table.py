@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators import snapshot_table as S
 from gpt_rag_ingestion_spark.operators import upsert as U
 
@@ -81,33 +82,36 @@ def test_commit_crash_legs_roll_forward_or_invisible(
     upd = _inc(spark, 0, 100, mul=99)
 
     # leg 1: die after the manifest write, before the tmp pointer
-    real_write = S._write_text
+    real_write = fsio.write_text
 
     def crash_on_tmp(spark_, path, text):
         if path.endswith("_current__tmp"):
             raise RuntimeError("injected crash before pointer")
         return real_write(spark_, path, text)
 
-    monkeypatch.setattr(S, "_write_text", crash_on_tmp)
+    monkeypatch.setattr(fsio, "write_text", crash_on_tmp)
     with pytest.raises(RuntimeError, match="injected"):
         S.snapshot_merge_upsert(spark, snap, upd, partition_cols=["bucket"])
-    monkeypatch.setattr(S, "_write_text", real_write)
+    monkeypatch.setattr(fsio, "write_text", real_write)
     assert _rows(S.read_snapshot_table(spark, snap)) == base  # unchanged
 
     # leg 2a: the rename FAILS but the writer is alive — the commit
     # self-heals by rewriting the pointer (r8: a concurrent recover
     # can legitimately consume tmp mid-swap, so a failed rename is no
     # longer fatal), and the table is immediately committed
-    real_rename = S._fs_rename
+    real_rename = fsio.rename
+    fired = []
 
     def crash_on_rename(spark_, src, dst):
         if dst.endswith("/_current"):
+            fired.append(dst)
             raise RuntimeError("injected crash mid-pointer-swap")
         return real_rename(spark_, src, dst)
 
-    monkeypatch.setattr(S, "_fs_rename", crash_on_rename)
+    monkeypatch.setattr(fsio, "rename", crash_on_rename)
     S.snapshot_merge_upsert(spark, snap, upd, partition_cols=["bucket"])
-    monkeypatch.setattr(S, "_fs_rename", real_rename)
+    monkeypatch.setattr(fsio, "rename", real_rename)
+    assert fired, "the injected rename failure never fired"
     assert _rows(S.read_snapshot_table(spark, snap)) == _rows(upd)
 
     # leg 2b: the writer DIES between delete and rename (simulated by
@@ -473,7 +477,7 @@ def test_two_writer_interleaving_raises_conflict(
 
 
 def test_truncated_tmp_pointer_never_bricks_table(spark, tmp_path):
-    """ADVICE r5 (low): _write_text is not atomic — a crash mid-write
+    """ADVICE r5 (low): fsio.write_text is not atomic — a crash mid-write
     of ``_current__tmp`` leaves a truncated file.  Roll-forward must
     validate (int-parsable + manifest exists) and otherwise DELETE the
     tmp; the table stays readable and writable."""
@@ -485,7 +489,7 @@ def test_truncated_tmp_pointer_never_bricks_table(spark, tmp_path):
 
     for junk in ("", "garbage", "99999999"):  # truncated / corrupt /
         # int-parsable but claiming a generation with no manifest
-        S._write_text(spark, f"{snap}/_current__tmp", junk)
+        fsio.write_text(spark, f"{snap}/_current__tmp", junk)
         # readers: unaffected (pointer file intact takes precedence)
         assert _rows(S.read_snapshot_table(spark, snap)) == base
         # writers: recovery discards the junk instead of rolling it
@@ -495,7 +499,7 @@ def test_truncated_tmp_pointer_never_bricks_table(spark, tmp_path):
         )
         got = S.read_snapshot_table(spark, snap)
         assert got.filter("parent_id >= 100").count() == 5
-        assert not S._fs_exists(spark, f"{snap}/_current__tmp")
+        assert not fsio.exists(spark, f"{snap}/_current__tmp")
         S.snapshot_delete_keys(
             spark, snap,
             spark.range(100, 105).select(F.col("id").alias("parent_id")),
@@ -1137,7 +1141,7 @@ def test_heartbeat_keeps_stalled_writer_alive_past_lease(
     monkeypatch.setattr(S, "CLAIM_LEASE_MS", 400)
     monkeypatch.setattr(S, "CLAIM_HEARTBEAT_MS", 100)
 
-    real_write = S._write_text
+    real_write = fsio.write_text
     stalled = threading.Event()
 
     def stall_on_tmp(spark_, path, text):
@@ -1146,7 +1150,7 @@ def test_heartbeat_keeps_stalled_writer_alive_past_lease(
             time.sleep(1.2)   # 3x the lease, mid-commit, post-claim
         return real_write(spark_, path, text)
 
-    monkeypatch.setattr(S, "_write_text", stall_on_tmp)
+    monkeypatch.setattr(fsio, "write_text", stall_on_tmp)
     err: list[BaseException] = []
 
     def writer():
@@ -1175,7 +1179,7 @@ def test_heartbeat_keeps_stalled_writer_alive_past_lease(
 
     # control: a claim with NO heartbeat (dead owner) is pruned once
     # stale
-    monkeypatch.setattr(S, "_write_text", real_write)
+    monkeypatch.setattr(fsio, "write_text", real_write)
     dead = os.path.join(snap, "_manifests", f"{cur + 2:08d}.json")
     with open(dead, "w") as f:
         json.dump({"gen": cur + 2, "partitions": {}, "op": "merge"}, f)
@@ -1197,20 +1201,20 @@ def test_aborted_commit_releases_own_claim(spark, tmp_path, monkeypatch):
     )
     cur = S._current_gen(spark, snap)
 
-    real_write = S._write_text
+    real_write = fsio.write_text
 
     def crash_on_tmp(spark_, path, text):
         if path.endswith("_current__tmp"):
             raise RuntimeError("injected crash before pointer")
         return real_write(spark_, path, text)
 
-    monkeypatch.setattr(S, "_write_text", crash_on_tmp)
+    monkeypatch.setattr(fsio, "write_text", crash_on_tmp)
     with pytest.raises(RuntimeError, match="injected"):
         S.snapshot_merge_upsert(
             spark, snap, _inc(spark, 0, 10, mul=5),
             partition_cols=["bucket"],
         )
-    monkeypatch.setattr(S, "_write_text", real_write)
+    monkeypatch.setattr(fsio, "write_text", real_write)
 
     # claim self-released (no orphan manifest above the pointer)
     claim = os.path.join(snap, "_manifests", f"{cur + 1:08d}.json")
@@ -1488,8 +1492,8 @@ def test_vacuum_retain_hours_window(spark, tmp_path):
     with open(m1) as fh:
         body = json.load(fh)
     body["committed_at_ms"] = int(S._now_ms(spark) - 48 * 3_600_000)
-    S._fs_delete(spark, m1)
-    S._write_text(spark, m1, json.dumps(body, sort_keys=True))
+    fsio.delete(spark, m1)
+    fsio.write_text(spark, m1, json.dumps(body, sort_keys=True))
     S.snapshot_vacuum(spark, snap, retain_hours=24)
     import pytest as _pytest
 
@@ -1813,8 +1817,8 @@ def test_time_travel_timestamp_mtime_fallback_pre_r12(spark, tmp_path):
             body = json.load(fh)
         body.pop("committed_at_ms", None)
         # rewrite through the Hadoop FS (keeps the .crc sidecar valid)
-        S._fs_delete(spark, p)
-        S._write_text(spark, p, json.dumps(body, sort_keys=True))
+        fsio.delete(spark, p)
+        fsio.write_text(spark, p, json.dumps(body, sort_keys=True))
         os.utime(p, (t, t))
     between = int(1_500_000_000 * 1000)
     assert S.snapshot_gen_at_timestamp(spark, snap, between) == 1
@@ -1882,7 +1886,7 @@ def test_table_detail_metadata_only(spark, tmp_path):
 
 @pytest.mark.slow
 def test_forced_rollforward_validates_garbage_tmp(spark, tmp_path):
-    """r8 advisor #1: a writer SIGKILLed mid-_write_text leaves a
+    """r8 advisor #1: a writer SIGKILLed mid-fsio.write_text leaves a
     truncated/garbage _current__tmp.  The commit wait loop's FORCED
     roll-forward must validate tmp exactly as _commit_recover does —
     delete the garbage instead of renaming it over the valid pointer
@@ -1891,7 +1895,7 @@ def test_forced_rollforward_validates_garbage_tmp(spark, tmp_path):
     S.snapshot_merge_upsert(spark, snap, _inc(spark, 0, 30))
     cur_before = S._current_gen(spark, snap)
     # dead writer's torn tmp: garbage bytes, no owner coming back
-    S._write_text(spark, f"{snap}/_current__tmp", "garb@ge")
+    fsio.write_text(spark, f"{snap}/_current__tmp", "garb@ge")
     # a direct _commit (bypassing the entry-point _commit_recover)
     # hits the wait loop, times out (~10 s), validates, deletes the
     # garbage and lands normally
@@ -1900,7 +1904,7 @@ def test_forced_rollforward_validates_garbage_tmp(spark, tmp_path):
     _inc(spark, 30, 40).write.parquet(S._gen_dir(snap, gname))
     S._commit(spark, snap, gen, {"": gname}, expected_cur=cur_before)
     assert S._current_gen(spark, snap) == gen
-    assert not S._fs_exists(spark, f"{snap}/_current__tmp")
+    assert not fsio.exists(spark, f"{snap}/_current__tmp")
     assert S.read_snapshot_table(spark, snap).count() == 10
 
 
@@ -1920,12 +1924,12 @@ def test_vacuum_spares_inflight_rebase_dirs(spark, tmp_path):
     crumb = S._register_inflight(spark, snap, {gname})
     assert crumb is not None
     rep = S.snapshot_vacuum(spark, snap, keep_snapshots=1)
-    assert S._fs_exists(spark, S._gen_dir(snap, gname)), (
+    assert fsio.exists(spark, S._gen_dir(snap, gname)), (
         "inflight-protected dir was vacuumed", rep)
     # breadcrumb released -> next vacuum reclaims the orphan
-    S._fs_delete(spark, crumb)
+    fsio.delete(spark, crumb)
     S.snapshot_vacuum(spark, snap, keep_snapshots=1)
-    assert not S._fs_exists(spark, S._gen_dir(snap, gname))
+    assert not fsio.exists(spark, S._gen_dir(snap, gname))
 
 
 def test_rebase_detects_vacuumed_staging_dir(spark, tmp_path):
@@ -1942,7 +1946,7 @@ def test_rebase_detects_vacuumed_staging_dir(spark, tmp_path):
     # ... but a rival commits gen 2 first
     S.snapshot_merge_upsert(spark, snap, _inc(spark, 50, 60, mul=9))
     # ... and vacuum reclaims the loser's staged dir
-    S._fs_delete(spark, S._gen_dir(snap, gname))
+    fsio.delete(spark, S._gen_dir(snap, gname))
     with pytest.raises(S.SnapshotWriteConflict):
         S._commit_rebasing(
             spark, snap, base_cur + 1, {"": gname},
@@ -2117,9 +2121,9 @@ def test_stats_sidecar_pins_partition_column_type(spark, tmp_path):
     m = S._read_manifest(spark, snap, cur)
     for g in set(m["partitions"].values()):
         sp = S._gen_stats_path(snap, g)
-        if not S._fs_exists(spark, sp):
+        if not fsio.exists(spark, sp):
             continue
-        stats = _json.loads(S._read_text(spark, sp))
+        stats = _json.loads(fsio.read_text(spark, sp))
         for _f, ent in stats["files"].items():
             if "part" in ent:
                 assert isinstance(ent["part"]["min"], str), (g, ent)

@@ -191,6 +191,7 @@ def test_n_writer_schedules_with_kill_injection(
     )
     errs = _race(spark, table, incs, max_conflict_rebases=16)
     killer.disarm()
+    assert killer.fired, f"the armed kill never fired: {killer.log}"
 
     injected = {
         w: e for w, e in errs.items()

@@ -144,6 +144,7 @@ def test_stream_soak_bounded_fanin_reader_and_kills(
                 with pytest.raises(Exception):
                     drain()
                 killer.disarm()
+                assert killer.fired, "the tick's kill never fired"
                 # a kill AT the claim write orphans the claim in both
                 # modes (the abort cleanup guards only later legs);
                 # the re-drain relies on the lease path pruning it
@@ -262,6 +263,7 @@ def test_convert_then_stream_soak_composition(spark, tmp_path, monkeypatch):
             with pytest.raises(Exception):
                 drain()
             killer.disarm()
+            assert killer.fired, "the tick's kill never fired"
             time.sleep(0.6)  # orphaned claim lease (kill at the claim)
         drain()
         cur = S._current_gen(spark, table)

@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import fsio
 from gpt_rag_ingestion_spark.operators import upsert as U
 
 
@@ -26,17 +27,25 @@ def _rows(spark, path):
 
 
 def _crash_on_nth_rename(monkeypatch, n: int):
-    real = U._fs_rename
-    state = {"k": 0}
+    """Make the n-th ``fsio.rename`` raise; the returned restore()
+    un-patches it and asserts the crash fired."""
+    real = fsio.rename
+    state = {"k": 0, "fired": False}
 
     def crashing(spark, src, dst):
         state["k"] += 1
         if state["k"] == n:
+            state["fired"] = True
             raise RuntimeError(f"injected crash before rename #{n}")
         return real(spark, src, dst)
 
-    monkeypatch.setattr(U, "_fs_rename", crashing)
-    return lambda: monkeypatch.setattr(U, "_fs_rename", real)
+    monkeypatch.setattr(fsio, "rename", crashing)
+
+    def restore():
+        monkeypatch.setattr(fsio, "rename", real)
+        assert state["fired"], f"rename #{n} never happened"
+
+    return restore
 
 
 def _inc(spark, lo, hi):
@@ -67,12 +76,12 @@ def test_unpartitioned_merge_crash_legs_converge(
     restore()
 
     # the table is still READABLE after recovery (old generation)
-    U._recover(spark, table)
+    fsio.recover_tree(spark, table)
     assert spark.read.parquet(table).count() == 100
 
     U.merge_upsert(spark, table, inc2)  # idempotent retry
     assert _rows(spark, table) == _rows(spark, golden)
-    assert not U._fs_exists(spark, table + "__old")
+    assert not fsio.exists(spark, table + "__old")
 
 
 @pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
@@ -99,7 +108,7 @@ def test_partitioned_merge_crash_legs_converge(
     restore()
 
     # recovery heals every partition __old; both partitions readable
-    U._recover(spark, table)
+    fsio.recover_tree(spark, table)
     got = spark.read.parquet(table)
     assert got.select("bucket").distinct().count() == 2
 
